@@ -2,8 +2,11 @@ package graft.audit
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.operators.Analytics
 
@@ -88,11 +91,39 @@ object SystemClock extends Clock {
 /** Append-only parquet store per log table with a latest-wins current view.
   * Id assignment is max-existing+1 — single-writer, as the reference's DB
   * sequences effectively are (SURVEY §7.5-4).
+  *
+  * The five log tables have fixed schemas (their case class plus
+  * `_event_seq`): reads pass the schema instead of inferring it from parquet
+  * footers, and a table with no events yet reads as an empty frame of that
+  * schema, so lookups on an empty store fail with "not found", not with an
+  * unresolved column.
+  *
+  * Open-row memo: [[appendRow]] remembers the last version this store
+  * appended of each row that is still open (a RUNNING process, an unresolved
+  * error), and [[latest]] returns it without a scan. The entry is dropped
+  * when the row's version is closed (a terminal status, a resolution), so the
+  * memo holds only open rows. A miss — a row closed before, a store restarted
+  * over an existing log, an id another store appended — falls back to a scan
+  * of [[current]]. The memo rests on the same single-writer assumption as
+  * the id and `_event_seq` counters: a version another writer appends to the
+  * same directory is not seen by this store's memo.
   */
 final class LogStore(val spark: SparkSession, dir: String) {
   import spark.implicits._
 
   private def path(table: String) = s"$dir/logs/$table"
+
+  private val schemas: Map[String, StructType] = Seq(
+    "process_log" -> Encoders.product[ProcessLog].schema,
+    "error_log" -> Encoders.product[ErrorLog].schema,
+    "data_lineage" -> Encoders.product[DataLineageEdge].schema,
+    "performance_metrics" -> Encoders.product[PerformanceMetric].schema,
+    "configuration_log" -> Encoders.product[ConfigurationLog].schema
+  ).map { case (t, s) =>
+    // nullable throughout, as a parquet read reports every column
+    t -> StructType(s.add("_event_seq", LongType).map(_.copy(nullable = true)))
+  }.toMap
+
   // One counter PER TABLE, seeded lazily from that table's persisted max so
   // a new LogStore over an existing event log keeps each table's sequence
   // monotonic: without this, an update appended after a restart would sort
@@ -135,15 +166,43 @@ final class LogStore(val spark: SparkSession, dir: String) {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  def events(table: String): DataFrame = spark.read.parquet(path(table))
+  /** Every event of `table`; a log table with no events yet reads as an
+    * empty frame of its schema.
+    */
+  def events(table: String): DataFrame =
+    if (!exists(table)) spark.createDataFrame(java.util.Collections.emptyList[Row](), schemas(table))
+    else spark.read.schema(schemas(table)).parquet(path(table))
 
   /** Latest-wins state per id. */
   def current(table: String, idCol: String): DataFrame =
-    if (!exists(table)) spark.emptyDataFrame
-    else
-      Analytics
-        .dedupLatest(events(table), Seq(col(idCol)), Seq(col("_event_seq")))
-        .drop("_event_seq")
+    Analytics
+      .dedupLatest(events(table), Seq(col(idCol)), Seq(col("_event_seq")))
+      .drop("_event_seq")
+
+  private val openRows = new java.util.concurrent.ConcurrentHashMap[(String, Long), Product]()
+
+  /** Appends one version of row `id` and keeps it in the open-row memo while
+    * `open`; a closed version drops the row's entry.
+    */
+  private[audit] def appendRow[T <: Product: Encoder](table: String, id: Long, row: T, open: Boolean): Unit = {
+    appendEvents(table, Seq(row).toDF())
+    if (open) openRows.put((table, id), row) else openRows.remove((table, id))
+  }
+
+  /** The latest version of row `id`: the memo's when this store appended it
+    * and it is still open, else the scan of the current view's row. A stale
+    * or wrong id fails naming it ("`label` with ID n not found"), not with an
+    * opaque NoSuchElementException.
+    */
+  private[audit] def latest[T <: Product: Encoder: ClassTag](
+      table: String, idCol: String, id: Long, label: String): T = {
+    val hit = openRows.get((table, id)) match {
+      case row: T => Some(row)
+      case _ => current(table, idCol).where(col(idCol) === id).as[T].collect().headOption
+    }
+    require(hit.nonEmpty, s"$label with ID $id not found")
+    hit.get
+  }
 
   // id allocation mirrors the _event_seq mechanism above: seed once per
   // (table, idCol) from the persisted max, then count in memory — id
@@ -191,11 +250,13 @@ final class ProcessLogger(store: LogStore, clock: Clock = SystemClock) {
       targetLayer: Option[String] = None,
       createdBy: String = "system"): Long = {
     val id = store.nextId(table, "log_id")
-    val row = ProcessLog(id, name, description, clock.now(), None, "RUNNING",
-      None, None, None, None, sourceSystem, targetLayer, None, createdBy)
-    store.appendEvents(table, Seq(row).toDF())
+    append(ProcessLog(id, name, description, clock.now(), None, "RUNNING",
+      None, None, None, None, sourceSystem, targetLayer, None, createdBy))
     id
   }
+
+  private def append(row: ProcessLog): Unit =
+    store.appendRow(table, row.log_id, row, open = row.status == "RUNNING")
 
   def endProcess(
       id: Long,
@@ -205,20 +266,15 @@ final class ProcessLogger(store: LogStore, clock: Clock = SystemClock) {
       rowsUpdated: Option[Long] = None,
       rowsDeleted: Option[Long] = None,
       errorMessage: Option[String] = None): Unit = {
-    // same error contract as updateProcessMetrics: a stale/wrong id gets a
-    // message naming it, not an opaque NoSuchElementException from head()
-    val hits = store.current(table, "log_id").where(col("log_id") === id).as[ProcessLog].collect()
-    require(hits.nonEmpty, s"Process log with ID $id not found")
-    val cur = hits.head
-    val done = cur.copy(
+    val cur = store.latest[ProcessLog](table, "log_id", id, "Process log")
+    append(cur.copy(
       end_time = Some(clock.now()),
       status = status,
       rows_processed = rowsProcessed.orElse(cur.rows_processed),
       rows_inserted = rowsInserted.orElse(cur.rows_inserted),
       rows_updated = rowsUpdated.orElse(cur.rows_updated),
       rows_deleted = rowsDeleted.orElse(cur.rows_deleted),
-      error_message = errorMessage.orElse(cur.error_message))
-    store.appendEvents(table, Seq(done).toDF())
+      error_message = errorMessage.orElse(cur.error_message)))
   }
 
   /** Mid-run progress counters on a RUNNING process row
@@ -233,15 +289,12 @@ final class ProcessLogger(store: LogStore, clock: Clock = SystemClock) {
       rowsInserted: Option[Long] = None,
       rowsUpdated: Option[Long] = None,
       rowsDeleted: Option[Long] = None): Unit = {
-    val hits = store.current(table, "log_id").where(col("log_id") === id).as[ProcessLog].collect()
-    require(hits.nonEmpty, s"Process log with ID $id not found")
-    val cur = hits.head
-    val updated = cur.copy(
+    val cur = store.latest[ProcessLog](table, "log_id", id, "Process log")
+    append(cur.copy(
       rows_processed = rowsProcessed.orElse(cur.rows_processed),
       rows_inserted = rowsInserted.orElse(cur.rows_inserted),
       rows_updated = rowsUpdated.orElse(cur.rows_updated),
-      rows_deleted = rowsDeleted.orElse(cur.rows_deleted))
-    store.appendEvents(table, Seq(updated).toDF())
+      rows_deleted = rowsDeleted.orElse(cur.rows_deleted)))
   }
 
   def activeProcesses(): DataFrame =
@@ -280,9 +333,8 @@ final class ErrorLogger(store: LogStore, clock: Clock = SystemClock) {
       tableName: Option[String] = None,
       recovery: Option[String] = None): Long = {
     val id = store.nextId(table, "error_id")
-    val row = ErrorLog(id, processLogId, clock.now(), level, code, message,
-      detail, tableName, recovery, is_resolved = false, None, None)
-    store.appendEvents(table, Seq(row).toDF())
+    store.appendRow(table, id, ErrorLog(id, processLogId, clock.now(), level, code, message,
+      detail, tableName, recovery, is_resolved = false, None, None), open = true)
     id
   }
 
@@ -295,15 +347,13 @@ final class ErrorLogger(store: LogStore, clock: Clock = SystemClock) {
       detail = Some(e.getStackTrace.take(5).mkString("\n")))
 
   def markResolved(id: Long, by: String, notes: Option[String] = None): Unit = {
-    val hits = store.current(table, "error_id").where(col("error_id") === id).as[ErrorLog].collect()
-    require(hits.nonEmpty, s"Error log with ID $id not found")
-    val cur = hits.head
-    val resolved = cur.copy(
+    val cur = store.latest[ErrorLog](table, "error_id", id, "Error log")
+    store.appendRow(table, id, cur.copy(
       is_resolved = true,
       resolved_by = Some(by),
       resolved_timestamp = Some(clock.now()),
-      error_detail = notes.map(n => cur.error_detail.fold(n)(_ + "\n" + n)).orElse(cur.error_detail))
-    store.appendEvents(table, Seq(resolved).toDF())
+      error_detail = notes.map(n => cur.error_detail.fold(n)(_ + "\n" + n)).orElse(cur.error_detail)),
+      open = false)
   }
 
   def unresolvedErrors(): DataFrame =

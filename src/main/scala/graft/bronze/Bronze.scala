@@ -1,6 +1,11 @@
 package graft.bronze
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
 
@@ -22,6 +27,8 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * The reference's row-at-a-time INSERT loop (its hot path, >10k rows/s
   * target) becomes a single distributed parquet append: Spark parallelizes by
   * partition, so throughput scales with executors instead of round-trips.
+  * The batch's row count comes from that append too: an [[Observation]]
+  * counts the rows as the write streams them, so no job reads the table back.
   */
 object Bronze {
 
@@ -126,6 +133,11 @@ object Bronze {
     * Partial-failure tolerance and audit logging live in the orchestration
     * layer (graft.audit / graft.app).
     */
+  /** How long a load waits, after its write returned, for the write's row
+    * count to arrive over the listener bus.
+    */
+  private val ObservationTimeout = 30.seconds
+
   final class BronzeManager(
       spark: SparkSession,
       warehouseDir: String,
@@ -136,10 +148,20 @@ object Bronze {
     def loadCsvToBronze(csvPath: String, table: String, source: String): LoadResult = {
       val t0 = System.nanoTime()
       val batch = batchId(source, idGen)
-      val enriched = enrich(readCsv(spark, csvPath), batch, csvPath, idGen)
-      enriched.write.mode(SaveMode.Append).parquet(tablePath(table))
-      val rows = spark.read.parquet(tablePath(table))
-        .where(col("_ingestion_batch_id") === batch).count()
+      val written = Observation()
+      enrich(readCsv(spark, csvPath), batch, csvPath, idGen)
+        .observe(written, count(lit(1)).as("rows"))
+        .write.mode(SaveMode.Append).parquet(tablePath(table))
+      // read only after the write returned: a failed write throws above and
+      // never fills the observation. A listener-bus event lost after a
+      // successful write would leave it empty too, so the wait is bounded
+      // and a lost count fails the load instead of hanging it.
+      val rows =
+        try Await.result(written.future, ObservationTimeout).getAs[Long]("rows")
+        catch {
+          case e: TimeoutException => throw new IllegalStateException(
+            s"row count of batch $batch into $table not reported within $ObservationTimeout", e)
+        }
       LoadResult(table, rows, batch, (System.nanoTime() - t0) / 1e9)
     }
 

@@ -22,5 +22,16 @@ trait SparkSpec extends AnyFunSuite {
     }.getOrCreate()
   }
 
+  /** Runs `f` and counts the Spark jobs that ran meanwhile. */
+  def countingJobs[T](f: => T): (T, Long) = {
+    val jobs = new graft.perf.MetricsListener
+    spark.sparkContext.addSparkListener(jobs)
+    val out = try f finally {
+      jobs.settle()
+      spark.sparkContext.removeSparkListener(jobs)
+    }
+    (out, jobs.jobsCompleted.get)
+  }
+
   val Sf0001 = "/root/testdata/sf0.001"
 }

@@ -53,6 +53,29 @@ class OrchestratorSpec extends SparkSpec {
     orch.rollback() // reverse-order teardown must not throw
   }
 
+  test("a bronze load runs at most 7 Spark jobs per CSV: no read-backs of what it wrote") {
+    // per CSV: start append, CSV header, CSV infer, bronze write, lineage
+    // edge, metric, end append; a read-back of the bronze table or of the
+    // process log would add jobs here
+    import java.nio.file.Files
+    val data = Files.createTempDirectory("graft-crm")
+    val crm = Files.createDirectories(data.resolve("source_crm"))
+    def csv(name: String, lines: String*) =
+      Files.write(crm.resolve(name), lines.mkString("\n").getBytes("UTF-8"))
+    csv("cust_info.csv", "cst_id,cst_key,cst_firstname", "1,AW001,Ann", "2,AW002, Bob")
+    csv("prd_info.csv", "prd_id,prd_key,prd_cost",
+      "210,CO-RF-FR-R92B-58,", "211,CO-RF-FR-R92R-58,442")
+    csv("sales_details.csv", "sls_ord_num,sls_prd_key,sls_cust_id,sls_sales",
+      "SO43697,BK-R93R-62,1,3578", "SO43698,BK-M82S-44,2,3400")
+    val orch = new SetupOrchestrator(spark, Files.createTempDirectory("graft-wh3").toString)
+    val (res, jobs) = countingJobs(orch.runBronze(data.toString, "crm"))
+    info(s"$jobs Spark jobs for 3 CSVs")
+    assert(res.map(_.get.rowsLoaded) == Seq(2L, 2L, 2L))
+    assert(jobs <= 7 * 3, s"$jobs jobs for 3 CSVs")
+    assert(orch.store.current("process_log", "log_id")
+      .where(col("status") === "SUCCESS").count() == 3)
+  }
+
   test("bronze failure is tolerated per-source and logged") {
     val dir = java.nio.file.Files.createTempDirectory("graft-wh2").toString
     val orch = new SetupOrchestrator(spark, dir)

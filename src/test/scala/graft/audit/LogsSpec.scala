@@ -99,6 +99,80 @@ class LogsSpec extends SparkSpec {
     intercept[IllegalArgumentException] { pl.updateProcessMetrics(999L) }
   }
 
+  test("endProcess and updateProcessMetrics on an unknown id throw, on an empty store too") {
+    val empty = new ProcessLogger(freshStore, FixedClock)
+    val e1 = intercept[IllegalArgumentException] { empty.endProcess(1L, "SUCCESS") }
+    assert(e1.getMessage.contains("Process log with ID 1 not found"))
+    intercept[IllegalArgumentException] { empty.updateProcessMetrics(1L) }
+    val el = new ErrorLogger(freshStore, FixedClock)
+    val e2 = intercept[IllegalArgumentException] { el.markResolved(1L, "ops") }
+    assert(e2.getMessage.contains("Error log with ID 1 not found"))
+
+    val pl = new ProcessLogger(freshStore, FixedClock)
+    pl.startProcess("known")
+    val e3 = intercept[IllegalArgumentException] { pl.endProcess(999L, "SUCCESS") }
+    assert(e3.getMessage.contains("Process log with ID 999 not found"))
+    intercept[IllegalArgumentException] { pl.updateProcessMetrics(999L) }
+  }
+
+  test("reads on an empty store return empty frames with the log schema") {
+    val store = freshStore
+    assert(new ProcessLogger(store, FixedClock).activeProcesses().count() == 0)
+    assert(new ErrorLogger(store, FixedClock).unresolvedErrors().count() == 0)
+    assert(store.events("process_log").columns.toSeq ==
+      org.apache.spark.sql.Encoders.product[ProcessLog].schema.fieldNames.toSeq :+ "_event_seq")
+    assert(store.current("error_log", "error_id").columns.toSeq ==
+      org.apache.spark.sql.Encoders.product[ErrorLog].schema.fieldNames.toSeq)
+  }
+
+  test("endProcess after a terminal status still works (the memo misses, the scan finds the row)") {
+    val store = freshStore
+    val pl = new ProcessLogger(store, FixedClock)
+    val id = pl.startProcess("load")
+    pl.endProcess(id, "SUCCESS", rowsProcessed = Some(10))
+    pl.endProcess(id, "FAILED", errorMessage = Some("late failure"))
+    val cur = store.current("process_log", "log_id").collect().head
+    assert(cur.getAs[String]("status") == "FAILED")
+    assert(cur.getAs[Long]("rows_processed") == 10, "the scanned SUCCESS version is the base")
+    assert(cur.getAs[String]("error_message") == "late failure")
+  }
+
+  test("open-row memo: one store's updates leave the same log as a fresh store per step") {
+    // the same steps through one store (latest versions from its memo) and
+    // through a new store per step (latest versions from a scan)
+    def run(storeFor: () => LogStore): LogStore = {
+      var store = storeFor()
+      def pl = new ProcessLogger(store, FixedClock)
+      def el = new ErrorLogger(store, FixedClock)
+      def step[T](f: => T): T = { store = storeFor(); f }
+      val a = step(pl.startProcess("load_a", "first", Some("CRM"), Some("bronze")))
+      val b = step(pl.startProcess("load_b"))
+      step(pl.updateProcessMetrics(a, rowsProcessed = Some(500), rowsInserted = Some(400)))
+      step(pl.updateProcessMetrics(b, rowsProcessed = Some(7)))
+      step(pl.endProcess(a, "SUCCESS", rowsProcessed = Some(1000), rowsDeleted = Some(3)))
+      val e1 = step(el.logError("ERROR", "E1", "boom", Some(a), Some("detail"), Some("bronze.t")))
+      step(el.logError("WARNING", "E2", "drift", Some(b)))
+      step(el.markResolved(e1, "ops", Some("restarted")))
+      store
+    }
+    val memoDir = java.nio.file.Files.createTempDirectory("graft-logs-memo").toString
+    val memoStore = new LogStore(spark, memoDir)
+    val (memo, jobs) = countingJobs(run(() => memoStore))
+    assert(jobs <= 8, s"memo path: one append job per step, got $jobs")
+    val scanDir = java.nio.file.Files.createTempDirectory("graft-logs-scan").toString
+    val scan = run(() => new LogStore(spark, scanDir))
+
+    for ((table, id) <- Seq("process_log" -> "log_id", "error_log" -> "error_id")) {
+      def rows(s: LogStore) = s.current(table, id).orderBy(id).collect().toSeq
+      assert(rows(memo) == rows(scan), table)
+      assert(rows(memo).nonEmpty)
+      def events(s: LogStore) = s.events(table).orderBy("_event_seq").collect().toSeq
+      assert(events(memo) == events(scan), s"$table events")
+    }
+    assert(new ProcessLogger(memo, FixedClock).activeProcesses().count() == 1)
+    assert(new ErrorLogger(memo, FixedClock).unresolvedErrors().count() == 1)
+  }
+
   test("processHistory filters by status (audit_logger.py:348)") {
     val store = freshStore
     val pl = new ProcessLogger(store, FixedClock)

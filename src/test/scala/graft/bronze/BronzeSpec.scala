@@ -53,6 +53,33 @@ class BronzeSpec extends SparkSpec {
     assert(nums.head == 1 && nums.last == 1000 && nums.distinct.length == 1000)
   }
 
+  test("rowsLoaded is the batch's row count, on a first load and on an append to a non-empty table") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-bronze-count")
+    def csv(name: String, rows: Int) = {
+      val lines = "cst_id,cst_firstname,cst_create_date" +:
+        (1 to rows).map(i => s"$i,name$i ,2025-01-${"%02d".format(i % 28 + 1)}")
+      java.nio.file.Files.write(dir.resolve(name), lines.mkString("\n").getBytes("UTF-8")).toString
+    }
+    val uuids = Iterator("batch001", "batch002", "batch003")
+    val idGen = new Bronze.IdGen {
+      def now() = FixedIdGen.now()
+      def uuid8() = uuids.next()
+    }
+    val mgr = new Bronze.BronzeManager(spark, dir.toString, idGen)
+    def batchRows(batch: String) = spark.read.parquet(mgr.tablePath("t"))
+      .where(col("_ingestion_batch_id") === batch).count()
+
+    val first = mgr.loadCsvToBronze(csv("a.csv", 25), "t", "CRM")
+    assert(first.rowsLoaded == 25 && batchRows(first.batchId) == 25)
+    val second = mgr.loadCsvToBronze(csv("b.csv", 9), "t", "CRM")
+    assert(second.batchId != first.batchId)
+    assert(second.rowsLoaded == 9 && batchRows(second.batchId) == 9,
+      "the count is this batch's rows, not the table's")
+    assert(spark.read.parquet(mgr.tablePath("t")).count() == 34)
+    val empty = mgr.loadCsvToBronze(csv("header_only.csv", 0), "empty", "CRM")
+    assert(empty.rowsLoaded == 0)
+  }
+
   test("end-to-end bronze load writes enriched parquet with all metadata") {
     val dir = java.nio.file.Files.createTempDirectory("graft-bronze").toString
     val mgr = new Bronze.BronzeManager(spark, dir, FixedIdGen)
