@@ -1,39 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every SparkEntry query timed at the target scale
-  * factor, one JSON line on stdout. local[32] + AQE + UTC, shuffle
-  * partitions sized to the core count (not the 200 default).
+  * factor, one JSON line on stdout, on a [[graft.core.GraftSession]] local
+  * session (the host's cores, one shuffle partition per core).
   */
 object Bench {
+  // the sf1 scaling pass: the K most expensive queries, a wall budget for
+  // the pass and a per-query cap (see the pass below)
+  private val Sf1Top = 30
+  private val Sf1BudgetSec = 420.0
+  private val Sf1QueryCapSec = 300.0
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // default: one shuffle partition per core (local-mode right-sizing); the
-    // override exists for scale experiments (e.g. verifying that a larger
-    // partition count flattens a per-partition sort's log factor at 10× data)
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // sized ABOVE the whole suite's distinct codegen sources: an evicted
-      // entry means a Janino recompile whose load-lock gates every task of
-      // the stage needing it — cheap on an idle host, a stage-wide stall on
-      // a contended one (the class of tax behind BENCH_r07's q52)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.file.transferTo", "false")
-    // no-chmod local FS (see GraftSession.localFsConf): kills the
-    // per-created-file `chmod` process fork of the native-library-less
-    // stock local FS — profiled at up to ~half the wall of the streaming
-    // certification queries (r18 optimization pass)
-    val spark = graft.core.GraftSession.localFsConf.foldLeft(builder) {
-      case (b, (k, v)) => b.config(k, v)
-    }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
     // Warm the JVM/codegen/scheduler and the parquet reader once so the
     // first timed query measures the query, not session startup. The string
     // leg matters as much as the numeric one: the first regex/hash-heavy
@@ -75,29 +55,24 @@ object Bench {
     // checkpoint block paths, paying those classes' loading + JIT inside
     // their timed reps (-verbose:class measured ~3k class loads and ~21 s
     // of JIT demand during an isolated q27) — synthetic input only.
-    // SPARK_GRAFT_WARM_MINIMAL=1 skips this block: the A/B control for
-    // diagnosing warmup-coverage regressions, not for normal runs.
-    if (!sys.env.contains("SPARK_GRAFT_WARM_MINIMAL")) {
-      val base = spark.range(0, 50000)
-        .selectExpr("id", "id % 97 as k", "cast(id as double) as v")
-        .localCheckpoint()
-      val cached = base.cache()
-      cached.count()
-      cached
-        .join(
-          org.apache.spark.sql.functions.broadcast(
-            cached.groupBy("k").agg(org.apache.spark.sql.functions.max("v").as("mv"))),
-          "k")
-        .selectExpr("sum(v + mv)")
-        .collect()
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("k").orderBy("id")
-      cached
-        .select(org.apache.spark.sql.functions.sum("v").over(w).as("rs"))
-        .agg(org.apache.spark.sql.functions.max("rs"))
-        .collect()
-      cached.unpersist(blocking = false)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
+    val base = spark.range(0, 50000)
+      .selectExpr("id", "id % 97 as k", "cast(id as double) as v")
+      .localCheckpoint()
+    val cached = base.cache()
+    cached.count()
+    cached
+      .join(
+        org.apache.spark.sql.functions.broadcast(
+          cached.groupBy("k").agg(org.apache.spark.sql.functions.max("v").as("mv"))),
+        "k")
+      .selectExpr("sum(v + mv)")
+      .collect()
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("k").orderBy("id")
+    cached
+      .select(org.apache.spark.sql.functions.sum("v").over(w).as("rs"))
+      .agg(org.apache.spark.sql.functions.max("rs"))
+      .collect()
+    graft.core.GraftSession.release(spark)
     // the parquet-reader warm doubles as the machine-load SENTINEL: a fixed
     // scan whose wall-time a reader compares across rounds to separate
     // uniform host drift ("everything 1.3x slower, sentinel too") from plan
@@ -122,13 +97,6 @@ object Bench {
     // reconstruct with an idle-machine debugging session
     val listener = new graft.perf.MetricsListener
     spark.sparkContext.addSparkListener(listener)
-    // diagnostics (stack sampling is env-gated: it is for local root-cause
-    // hunts, not driver runs; JVM counters are cheap and always recorded
-    // into the detail artifact — they separate driver-side costs the
-    // executor-task telemetry cannot see, e.g. JIT/codegen churn)
-    val sampler = if (sys.env.contains("SPARK_GRAFT_BENCH_SAMPLE")) Some(new graft.perf.StackSampler()) else None
-    val profileOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_PROFILE_OUT", "/tmp/bench_profile.txt")
-    val profileSink = sampler.map(_ => new java.io.PrintWriter(new java.io.FileWriter(profileOut)))
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // failures of the EXTRA adjudication rep (two successful reps already
     // proved the query): kept under their own key so a flaky cause (an
@@ -163,27 +131,18 @@ object Bench {
               false
           }
         val elapsed = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-        // each query pays for its own caching inside its timing; dropping
-        // the caches BETWEEN reps (untimed) keeps reps independent — the LSH
-        // pipelines persist corpus-scale frames that otherwise accumulate
-        // and tax late queries with storage/GC pressure. localCheckpoint RDD
-        // blocks (the CC loops' final generations, lineage frontiers) are
-        // outside the SQL cache manager — sweep ALL persistent RDDs
-        // explicitly: GC-driven cleanup is too lazy over a 79-query × 2-rep
-        // session, and the leaked blocks evict later queries' live caches
-        // into recompute storms (q53 measured 3.1 s fresh vs 13.9 s
-        // mid-suite before this sweep)
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        // stream scratch (drops/checkpoints/sinks) is RAM-backed: reap each
-        // rep's trees now (untimed) instead of letting the shutdown hook
-        // hold every query's tree in memory across the whole bench
-        graft.queries.Pipeline.reapScratch()
+        // each query pays for its own caching inside its timing; releasing
+        // the session BETWEEN reps (untimed) keeps reps independent — the
+        // LSH pipelines persist corpus-scale frames that otherwise
+        // accumulate and tax late queries with storage/GC pressure
+        graft.core.GraftSession.release(spark)
         System.gc()
         elapsed
       }
+      // JVM counters are cheap and always recorded into the detail artifact:
+      // they separate driver-side costs the executor-task telemetry cannot
+      // see, e.g. JIT/codegen churn
       val jvm0 = graft.perf.JvmMetrics.snapshot()
-      sampler.foreach(_.start())
       val r1 = rep()
       // second rep with telemetry deltas; reporting min-of-2 makes the
       // per-query number robust to one-off host-load spikes (the r2->r3->r4
@@ -213,17 +172,6 @@ object Bench {
       val reps = Seq(r1, r2) ++ (if (tryThird) Seq(r3) else Nil)
       val wall = if (r1 >= 0 && r2 >= 0) reps.filter(_ >= 0).min
         else math.max(r1, r2)
-      sampler.foreach { s =>
-        s.stop()
-        // only slow queries earn a stack report — the interesting signal is
-        // "what were threads doing during the queries whose wall exceeds
-        // cpu+gc", and fast queries just add noise to the file
-        if (reps.max > 1.5) profileSink.foreach { w =>
-          w.println(s"==== $name reps=${reps.map(fmt).mkString("/")} ====")
-          s.top(30).foreach { case (k, n) => w.println(f"$n%6d  $k") }
-          w.flush()
-        }
-      }
       val jvm1 = graft.perf.JvmMetrics.snapshot()
       val jvmDelta = jvm1.map { case (k, v) => k -> (v - jvm0.getOrElse(k, 0L)) }
       Console.err.println(f"bench: $name reps=${reps.map(fmt).mkString("/")} " +
@@ -234,7 +182,6 @@ object Bench {
     // closing sentinel sample: the last stretch of queries also gets a
     // load reference next to it in the artifact
     sentinelSeries += ((selected.size, sentinelSample()))
-    profileSink.foreach(_.close())
 
     // ---- the 10x SCALING pass: re-time the most expensive queries on a
     // 10x copy of the input and record per-query sf ratios IN the
@@ -244,12 +191,11 @@ object Bench {
     // denominator), top-K by measured wall, wall-budgeted: whatever the
     // budget drops is NAMED in sf1_skipped — no silent caps.
     // default-on for the full contract; "0" disables, "force" also runs
-    // it under a BENCH_ONLY subset (the local smoke path for this pass)
+    // it under a BENCH_ONLY subset (the local smoke path for this pass).
+    // A failed query does not switch the pass off: it is named in `errors`
+    // and drops out of the candidates, the rest still get their ratios.
     val sf1Env = sys.env.getOrElse("SPARK_GRAFT_BENCH_SF1", "1")
-    val sf1Enabled = sf1Env != "0" && errors.isEmpty &&
-      (only.isEmpty || sf1Env == "force")
-    val sf1Top = sys.env.getOrElse("SPARK_GRAFT_BENCH_SF1_TOP", "30").toInt
-    val sf1Budget = sys.env.getOrElse("SPARK_GRAFT_BENCH_SF1_BUDGET", "420").toDouble
+    val sf1Enabled = sf1Env != "0" && (only.isEmpty || sf1Env == "force")
     var sf1GenSec = -1.0
     val sf1Walls = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     // per-entry (run_ms, cpu_ms, gc_ms, heap_mb-after) — the sf1 twin of
@@ -290,12 +236,12 @@ object Bench {
         val candidates = results
           .collect { case (n, w, _, _, _, _) if w >= 0 => (n, w) }
           .sortBy(-_._2)
-          .take(sf1Top)
+          .take(Sf1Top)
           .sortBy(_._2)
         val fnByName = SparkEntry.queries
         var spent = 0.0
         candidates.foreach { case (name, _) =>
-          if (spent > sf1Budget) sf1Skipped += name
+          if (spent > Sf1BudgetSec) sf1Skipped += name
           else {
             // watchdog: a super-linear plan at 10x (the exact regression
             // this pass hunts) must become a recorded -1, not an
@@ -306,9 +252,7 @@ object Bench {
             // deadline below has the harness stop() those queries at the
             // same cap, so streaming blowups are bounded too (r17's two
             // budget-eaters were both streaming-shaped).
-            val capSec = math.min(
-              sys.env.getOrElse("SPARK_GRAFT_BENCH_SF1_QUERY_CAP", "300").toDouble,
-              math.max(30.0, sf1Budget - spent))
+            val capSec = math.min(Sf1QueryCapSec, math.max(30.0, Sf1BudgetSec - spent))
             val group = s"bench-sf1-$name"
             spark.sparkContext.setJobGroup(group, group, interruptOnCancel = true)
             val watchdog = new java.util.Timer("bench-sf1-watchdog", true)
@@ -334,9 +278,7 @@ object Bench {
               }
             val wall = (System.nanoTime() - t0) / 1e9
             listener.settle()
-            spark.catalog.clearCache()
-            spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-            graft.queries.Pipeline.reapScratch()
+            graft.core.GraftSession.release(spark)
             System.gc()
             val heapMb = graft.perf.JvmMetrics.snapshot()("heap_mb")
             sf1Tele += name -> ((listener.executorRunTimeMs.get - run0,
@@ -344,7 +286,7 @@ object Bench {
               listener.jvmGcTimeMs.get - gc0, heapMb))
             sf1Walls += name -> (if (ok) wall else -1.0)
             spent += wall
-            Console.err.println(f"bench-sf1: $name ${fmt(wall)}s ok=$ok (spent ${fmt(spent)}s of $sf1Budget%.0f)")
+            Console.err.println(f"bench-sf1: $name ${fmt(wall)}s ok=$ok (spent ${fmt(spent)}s of $Sf1BudgetSec%.0f)")
           }
         }
       } catch {
@@ -379,7 +321,7 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.collect { case (_, v, _, _, _, _) if v >= 0 => v }.sum
     // per-query sf ratio: the 10x wall over the base min-of-2 wall — the
-    // in-artifact scaling exponent (10x data on the same 32 cores; a
+    // in-artifact scaling exponent (10x data on the same cores; a
     // ratio far past 10 means a super-linear plan term, see PLANS.md)
     val baseWall = results.map { case (k, v, _, _, _, _) => k -> v }.toMap
     val sf1QJson = sf1Walls.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
@@ -393,7 +335,7 @@ object Bench {
       s"\"" + k + s"\":{\"run_ms\":$run,\"cpu_ms\":$cpu,\"gc_ms\":$gc,\"heap_mb\":$heap}"
     }.mkString("{", ",", "}")
     val sf1Json =
-      s"""{"dir":"$sf1Dir","gen_sec":${fmt(sf1GenSec)},"top":$sf1Top,"budget_sec":${fmt(sf1Budget)},"queries":$sf1QJson,"sf_ratio":$sf1RatioJson,"telemetry":$sf1TeleJson,"skipped_budget":$sf1SkippedJson}"""
+      s"""{"dir":"$sf1Dir","gen_sec":${fmt(sf1GenSec)},"top":$Sf1Top,"budget_sec":${fmt(Sf1BudgetSec)},"queries":$sf1QJson,"sf_ratio":$sf1RatioJson,"telemetry":$sf1TeleJson,"skipped_budget":$sf1SkippedJson}"""
     val line =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"errors":$errJson,"adjudication_errors":$adjErrJson,"failed":${errors.size},"warmup_sec":${fmt(warmupSec)},"sentinels":$sentinelJson,"telemetry":$teleJson,"sf1":$sf1Json,"sf":"$sfDir"}"""
     // The full artifact (long names, reps, telemetry) runs ~10 KB — far past

@@ -10,7 +10,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = core.GraftSession.local(cores = 4, shufflePartitions = 4)
+    val spark = core.GraftSession.local()
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -5,15 +5,15 @@ import org.apache.spark.sql.functions._
 
 /** Full-schema scale-up generator: replicates EVERY test table `copies`×
   * with all keys remapped into disjoint per-copy ranges, producing an
-  * sf(N×src) directory on which the complete 97-query contract (not just
+  * sf(N×src) directory on which the complete query contract (not just
   * the bench subset) can run against the DuckDB oracle.
   *
-  * Key discipline mirrors [[ScaleSmoke]]: each copy's foreign keys are
-  * offset by the same `copy × SPAN`, so every copy is a self-consistent
-  * TPC-H-ish universe (orders reference the copy's customers, lineitems
-  * the copy's orders/parts/suppliers, events the copy's users) and the
-  * result is `copies` independent corpora — the duplicate/skew structure
-  * per copy is preserved rather than turned into cross-copy duplicates:
+  * Key discipline: each copy's foreign keys are offset by the same
+  * `copy × SPAN`, so every copy is a self-consistent TPC-H-ish universe
+  * (orders reference the copy's customers, lineitems the copy's
+  * orders/parts/suppliers, events the copy's users) and the result is
+  * `copies` independent corpora — the duplicate/skew structure per copy
+  * is preserved rather than turned into cross-copy duplicates:
   *   - documents: tokens suffixed with the copy index (shingle-disjoint
   *     copies), sources suffixed so per-source rollups stay per-copy;
   *   - embeddings: every component shifted by copy × 2^-7 (exact in
@@ -68,7 +68,7 @@ object ScaleData {
         (col("doc_id") + lit(i * Span)).as("doc_id"),
         // suffix every token (so every shingle) with the copy index;
         // whitespace runs are preserved so normalization behaves as in the
-        // original corpus (same convention as ScaleSmoke)
+        // original corpus
         regexp_replace(col("text"), "(\\S+)", s"$$1·$i").as("text"),
         col("lang"),
         concat(col("source"), lit(s"_$i")).as("source"),

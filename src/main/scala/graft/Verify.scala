@@ -1,24 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.file.transferTo", "false")
-    // no-chmod local FS (see GraftSession.localFsConf)
-    val spark = graft.core.GraftSession.localFsConf.foldLeft(builder) {
-      case (b, (k, v)) => b.config(k, v)
-    }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_ONLY=q90_...,q94_... restricts the dump for local
     // iteration; unset = full contract (driver use)
@@ -32,15 +19,10 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // LSH/curation queries persist corpus-scale frames; release between
-      // queries so the dump never accumulates session-wide storage — incl.
-      // localCheckpoint blocks, which live outside the SQL cache manager
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      // and reap the query's stream scratch (drops/checkpoints/sinks) NOW:
-      // the scratch base is RAM-backed, so shutdown-hook-only cleanup would
-      // hold every stream query's tree in memory for the whole dump
-      graft.queries.Pipeline.reapScratch()
+      // LSH/curation queries persist corpus-scale frames and stream
+      // queries leave RAM-backed scratch: release between queries so the
+      // dump never accumulates either
+      graft.core.GraftSession.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

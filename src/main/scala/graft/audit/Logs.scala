@@ -229,13 +229,6 @@ final class LogStore(val spark: SparkSession, dir: String) {
       }
     ctr.incrementAndGet()
   }
-
-  /** Typed current view (SURVEY §1.4: fixed-schema logs tables are natural
-    * `Dataset[T]`s — compile-time field checks on the audit path).
-    */
-  def currentAs[T: org.apache.spark.sql.Encoder](
-      table: String, idCol: String): org.apache.spark.sql.Dataset[T] =
-    current(table, idCol).as[T]
 }
 
 /** Process lifecycle logging (reference `logs/audit_logger.py:188-399`). */

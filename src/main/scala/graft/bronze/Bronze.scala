@@ -164,17 +164,5 @@ object Bronze {
         }
       LoadResult(table, rows, batch, (System.nanoTime() - t0) / 1e9)
     }
-
-    /** The reference's CRM table set (bronze.py:609-613). */
-    def loadAllCrm(datasetsDir: String): Seq[LoadResult] = Seq(
-      loadCsvToBronze(s"$datasetsDir/source_crm/cust_info.csv", "crm_customers_raw", "CRM"),
-      loadCsvToBronze(s"$datasetsDir/source_crm/prd_info.csv", "crm_products_raw", "CRM"),
-      loadCsvToBronze(s"$datasetsDir/source_crm/sales_details.csv", "crm_sales_raw", "CRM"))
-
-    /** The reference's ERP table set (bronze.py:648-652). */
-    def loadAllErp(datasetsDir: String): Seq[LoadResult] = Seq(
-      loadCsvToBronze(s"$datasetsDir/source_erp/CUST_AZ12.csv", "erp_customers_raw", "ERP"),
-      loadCsvToBronze(s"$datasetsDir/source_erp/LOC_A101.csv", "erp_locations_raw", "ERP"),
-      loadCsvToBronze(s"$datasetsDir/source_erp/PX_CAT_G1V2.csv", "erp_product_categories_raw", "ERP"))
   }
 }

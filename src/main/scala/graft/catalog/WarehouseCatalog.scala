@@ -31,8 +31,12 @@ final class WarehouseCatalog(spark: SparkSession, warehouseDir: String) {
   def readTable(db: String, table: String): DataFrame =
     spark.table(s"${q(db)}.$table")
 
+  /** The database's own tables: Spark lists the session's temp views under
+    * every database too, and those are no layer's tables (reading one as
+    * `db.view` fails).
+    */
   def listTables(db: String): Seq[String] =
-    spark.catalog.listTables(q(db)).collect().map(_.name).toSeq
+    spark.catalog.listTables(q(db)).collect().filterNot(_.isTemporary).map(_.name).toSeq
 
   /** Column introspection (reference catalog metadata queries,
     * sql/query_builder.py:390-567: information_schema.columns).

@@ -6,8 +6,8 @@ import org.apache.spark.storage.StorageLevel
 /** Cache materialization policy for operators that fan a persisted frame out
   * to multiple consumers inside one downstream action.
   *
-  * Two measured pathologies with a plain lazy `persist` (numbers from
-  * `graft.perf.LshProfile` at sf0.1, recorded in PLANS.md):
+  * Two measured pathologies with a plain lazy `persist` (numbers from a
+  * stage profile of the LSH pipeline at sf0.1, recorded in PLANS.md):
   *
   *  1. '''Cold-cache stage races.''' AQE plans each shuffle stage of the
   *     consuming job independently, and every stage containing the

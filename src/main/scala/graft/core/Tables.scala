@@ -46,48 +46,3 @@ final case class Tables(spark: SparkSession, dir: String) {
   def documents: DataFrame = table("documents")
   def embeddings: DataFrame = table("embeddings")
 }
-
-object GraftSession {
-  /** Local-host filesystem tuning shared by every entrypoint's builder:
-    * the no-chmod local FS (both Hadoop APIs — see
-    * [[graft.core.NoChmodLocalFs]]: without the Hadoop native library,
-    * every file/dir create on the stock local FS forks a `chmod` process;
-    * stack-sampled at up to ~half the wall of the streaming certification
-    * queries). Pure environment fix — no query plan or result changes; a
-    * real cluster FS (HDFS/S3) never takes this code path.
-    */
-  def localFsConf: Map[String, String] = Map(
-    "spark.hadoop.fs.file.impl" -> classOf[NoChmodLocalFileSystem].getName,
-    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NoChmodLocalFs].getName)
-
-  /** Local session with the settings every entrypoint needs: UTC (oracle
-    * parity), AQE on (runtime re-plan / skew handling at scale), shuffle
-    * partitions sized for local[32] rather than the 200 default.
-    */
-  def local(cores: Int = 32, shufflePartitions: Int = 32): SparkSession = {
-    val builder = SparkSession
-      .builder()
-      .master(s"local[$cores]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the default 100-entry codegen class cache evicts under a
-      // many-query workload; every eviction recompiles the generated class
-      // and restarts its JIT profile from the interpreter — profiled as
-      // intermittent 13x task-CPU blowups on byte-identical reps
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // the bypass shuffle writer concatenates its per-reduce-partition
-      // files with NIO transferTo, which mmaps the sources — 32 concurrent
-      // tasks x 32 files serialize on the single local-JVM address-space
-      // lock (jstack-profiled: 26/32 workers in FileChannelImpl.map0
-      // during multi-minute stalls). Stream copy avoids mmap entirely.
-      .config("spark.file.transferTo", "false")
-    val spark = localFsConf.foldLeft(builder) {
-      case (b, (k, v)) => b.config(k, v)
-    }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-}

@@ -43,14 +43,4 @@ object Gold {
           .when(col("lifetime_value") > 0, "Occasional")
           .otherwise("Prospect"))
   }
-
-  /** gold.product_performance: revenue and volume per product/category. */
-  def productPerformance(products: DataFrame, sales: DataFrame): DataFrame =
-    products
-      .join(sales, products("prd_key") === sales("sls_prd_key"), "left")
-      .groupBy(col("prd_id"), col("prd_nm"), col("cat_id"), col("prd_line"))
-      .agg(
-        coalesce(sum(col("sls_sales")), lit(0L)).as("total_revenue"),
-        coalesce(sum(col("sls_quantity")), lit(0L)).as("units_sold"),
-        countDistinct(col("sls_ord_num")).as("n_orders"))
 }

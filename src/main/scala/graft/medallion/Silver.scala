@@ -46,11 +46,6 @@ object Silver {
       .otherwise(initcap(trim(c)))
   }
 
-  /** Strip the `NAS` prefix from ERP customer ids (CUST_AZ12.CID). */
-  def normalizeErpCustomerKey(c: Column): Column =
-    when(trim(c).startsWith("NAS"), trim(c).substr(lit(4), length(trim(c))))
-      .otherwise(trim(c))
-
   /** Remove dashes from location-style customer ids (LOC_A101.CID
     * `AW-00011000` → `AW00011000`).
     */

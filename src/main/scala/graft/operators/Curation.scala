@@ -594,20 +594,19 @@ object Curation {
     * use; a session running many should `spark.catalog.clearCache()`
     * between them.
     */
-  // The pipeline defaults, shared with the stage benchmarks
-  // (perf.CurationStageBench / perf.LshProfile) so a measured stage can
-  // never silently drift from what q65/q66 actually run.
-  private[graft] val DefaultMinQuality = 0.5
-  private[graft] val DefaultMinDistinctRatio = 0.3
-  private[graft] val DefaultNumHashes = 16
-  private[graft] val DefaultNumBands = 4
-  private[graft] val DefaultShingleN = 1
-  private[graft] val DefaultMinJaccard = 0.5
+  // The pipeline defaults, shared by the entry points below so no stage
+  // can silently drift from what q65/q66 actually run.
+  private val DefaultMinQuality = 0.5
+  private val DefaultMinDistinctRatio = 0.3
+  private val DefaultNumHashes = 16
+  private val DefaultNumBands = 4
+  private val DefaultShingleN = 1
+  private val DefaultMinJaccard = 0.5
 
   /** The quality + distinct-ratio gate as a standalone frame — the exact
-    * first stage of [[curateCorpus]], exposed for the stage benchmarks.
+    * first stage of [[curateCorpus]].
     */
-  private[graft] def qualityGate(
+  private def qualityGate(
       docs: DataFrame,
       textCol: String,
       minQuality: Double = DefaultMinQuality,
@@ -620,8 +619,8 @@ object Curation {
           >= minDistinctRatio)
   }
 
-  /** The PII-mask stage of [[curateCorpus]], exposed for the stage benchmarks. */
-  private[graft] def maskStage(df: DataFrame, textCol: String): DataFrame =
+  /** The PII-mask stage of [[curateCorpus]]. */
+  private def maskStage(df: DataFrame, textCol: String): DataFrame =
     df.withColumn(textCol, maskPii(col(textCol)))
 
   def curateCorpus(
@@ -962,10 +961,9 @@ object Curation {
     // what actually enforces that: without it the optimizer column-prunes
     // the df branch differently (it drops the tf count), the two aggregate
     // subtrees stop being canonically equal, ReuseExchange never fires, and
-    // the full text is scanned+tokenized twice (plan-verified via
-    // perf.PlanProbe). tf carries ids+tokens only — far smaller than the
-    // text column — and has exactly the two-consumers-one-action shape
-    // core.Caching is for.
+    // the full text is scanned+tokenized twice (plan-verified). tf carries
+    // ids+tokens only — far smaller than the text column — and has exactly
+    // the two-consumers-one-action shape core.Caching is for.
     val tf = graft.core.Caching.eager(
       inst.groupBy(col("doc_id"), col("token"))
         .agg(count(lit(1)).as("tf")))

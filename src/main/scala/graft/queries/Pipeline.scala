@@ -1293,7 +1293,7 @@ object Pipeline {
       .orElse(Some("/dev/shm").filter(p => java.nio.file.Files.isWritable(java.nio.file.Paths.get(p))))
       .map(java.nio.file.Paths.get(_))
 
-  private def scratchDir(prefix: String): String = {
+  private[graft] def scratchDir(prefix: String): String = {
     scratchHook
     val dir = scratchBase match {
       case Some(base) => java.nio.file.Files.createTempDirectory(base, prefix)
@@ -1304,11 +1304,11 @@ object Pipeline {
   }
 
   /** Reap every registered scratch tree NOW. For the per-query harness
-    * loops (Verify/Bench call this after materializing each query's
-    * result): with the RAM-backed scratch base, waiting for the shutdown
-    * hook would accumulate every stream query's drop + checkpoint + sink
-    * tree in memory for the whole session — eager reaping bounds RAM use
-    * to one query's tree. Only safe once the query's result is
+    * loops (through [[graft.core.GraftSession.release]], after each
+    * query's result is materialized): with the RAM-backed scratch base,
+    * waiting for the shutdown hook would accumulate every stream query's
+    * drop + checkpoint + sink tree in memory for the whole session — eager
+    * reaping bounds RAM use to one query's tree. Only safe once the query's result is
     * MATERIALIZED (read-back frames reference these paths lazily).
     */
   def reapScratch(): Unit = {

@@ -753,64 +753,6 @@ object DocStream {
       .agg(graft.functions.MisraGriesFreqItems
         .freqItems(docs.sparkSession, col("_grams"), k).as("_mg"))
 
-  /** Streaming training-shard writer: each micro-batch's documents are
-    * curriculum-scheduled and appended into the range-bucketed shard
-    * layout `epoch_idx=E/shard=S/batch_id=B`. Sound as a PER-BATCH
-    * operation because the schedule is per-document map-only (the
-    * seed-keyed Sha60 key IS the order, [[Curation.curriculumOrder]]) —
-    * batch-wise scheduling is row-identical to scheduling the whole
-    * corpus, so a trainer's shard loader sees the same
-    * (epoch, shard, key-ordered) layout however arrival batched.
-    *
-    * Exactly-once: `batch_id` rides IN the partition path, so a replayed
-    * micro-batch dynamic-partition-overwrites exactly its own directories
-    * — the [[EventStream.toBronze]] idempotence contract extended to a
-    * layout where every batch legitimately touches the same (epoch, shard)
-    * cells and appending across batches must NOT clobber them.
-    */
-  def shardWriterStream(
-      docs: DataFrame,
-      sinkDir: String,
-      checkpoint: String,
-      seed: Long,
-      shardsPerEpoch: Int,
-      maxRecordsPerFile: Int): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        writeShardBatch(batch.toDF(), batchId, sinkDir, seed, shardsPerEpoch,
-          maxRecordsPerFile)
-      }
-      .start()
-
-  /** One micro-batch of the shard write, exposed for the idempotence and
-    * batch-isolation specs. Same per-cell layout discipline as the batch
-    * writer: one hash exchange on (epoch, shard), partition-local key
-    * sort, per-file row cap.
-    */
-  private[graft] def writeShardBatch(
-      batch: DataFrame,
-      batchId: Long,
-      sinkDir: String,
-      seed: Long,
-      shardsPerEpoch: Int,
-      maxRecordsPerFile: Int): Unit =
-    // dynamic overwrite is requested as a per-WRITE option (takes precedence
-    // over the session conf), so a concurrent partitioned overwrite on the
-    // shared session never inherits dynamic semantics from this micro-batch
-    Curation.curriculumShards(
-        Curation.curriculumOrder(batch, "doc_id", "text", seed),
-        shardsPerEpoch)
-      .withColumn("batch_id", lit(batchId))
-      .repartition(col("epoch_idx"), col("shard"))
-      .sortWithinPartitions(col("epoch_idx"), col("shard"), col("order_key"))
-      .write
-      .partitionBy("epoch_idx", "shard", "batch_id")
-      .option("maxRecordsPerFile", maxRecordsPerFile.toLong)
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(sinkDir)
-
   /** Shared gate predicates: `_q_ok` (quality score ≥ threshold) and `_r_ok`
     * (distinct-token ratio ≥ 0.3, the repetition gate). Both [[curate]] and
     * [[curateFunnel]] read these columns, so their semantics cannot drift.

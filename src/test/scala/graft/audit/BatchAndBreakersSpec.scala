@@ -64,4 +64,20 @@ class BatchAndBreakersSpec extends SparkSpec {
       assert(layer.exists(r => r.getString(1) == "t_intro" && r.getLong(2) == 1))
     } finally cat.dropDatabases()
   }
+
+  test("a layer's tables exclude the session's temp views") {
+    import spark.implicits._
+    val cat = new graft.catalog.WarehouseCatalog(
+      spark, java.nio.file.Files.createTempDirectory("graft-cat-tv").toString)
+    cat.createDatabases()
+    Seq(1L).toDF("id").createOrReplaceTempView("graft_layer_tv")
+    try {
+      cat.saveTable("silver", "t_layer", Seq((1L, "a")).toDF("id", "v"))
+      assert(cat.listTables("silver") == Seq("t_layer"))
+      assert(cat.analyzeMedallionLayer("silver").collect().map(_.getString(1)).toSeq == Seq("t_layer"))
+    } finally {
+      spark.catalog.dropTempView("graft_layer_tv")
+      cat.dropDatabases()
+    }
+  }
 }

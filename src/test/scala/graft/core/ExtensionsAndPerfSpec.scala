@@ -1,86 +1,16 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSpec
 import graft.audit.{LogStore, PerformanceMonitor}
 import graft.catalog.WarehouseCatalog
 import graft.perf.MetricsListener
 
-/** Extension registration, listener metrics, and bucketed co-location —
-  * each drives a real session and inspects real plans/metrics.
+/** Listener metrics and bucketed co-location — each drives the shared
+  * session and inspects real plans/metrics.
   */
-class ExtensionsAndPerfSpec extends AnyFunSuite {
-
-  // withExtensions only applies at session construction — if another suite
-  // already built the shared session, stop it and build fresh
-  lazy val spark: SparkSession = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach(_.stop())
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-  }
-
-  test("GraftExtensions makes cosine_similarity available in SQL at session start") {
-    val v = spark
-      .sql("SELECT cosine_similarity(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c")
-      .head().getDouble(0)
-    assert(v == 1.0)
-  }
-
-  test("RangeJoinRewrite turns a band join into an equi-join with identical rows") {
-    import spark.implicits._
-    val points = (0 until 500).map(i => (i.toLong, i * 1.7)).toDF("id", "v")
-    val bands = Seq((0L, 0.0, 100.0), (1L, 100.0, 400.0), (2L, 400.0, 900.0))
-      .toDF("band", "lo", "hi")
-    def q() = points.join(bands, points("v") >= bands("lo") && points("v") < bands("hi"))
-      .select("id", "band")
-
-    spark.conf.unset(graft.plans.RangeJoinRewrite.ChunkWidthConf)
-    val naive = q()
-    assert(naive.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"),
-      "without the rule a band join is a nested loop")
-    val expected = naive.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-
-    spark.conf.set(graft.plans.RangeJoinRewrite.ChunkWidthConf, "50")
-    try {
-      val rewritten = q()
-      val physical = rewritten.queryExecution.executedPlan.toString
-      assert(!physical.contains("BroadcastNestedLoopJoin"),
-        s"rule should eliminate the nested loop:\n$physical")
-      assert(physical.contains("BroadcastHashJoin") || physical.contains("SortMergeJoin")
-        || physical.contains("ShuffledHashJoin"),
-        s"rewritten join must be an equi-join:\n$physical")
-      val got = rewritten.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == expected, "rewrite must not change results")
-    } finally spark.conf.unset(graft.plans.RangeJoinRewrite.ChunkWidthConf)
-  }
-
-  test("RangeJoinRewrite leaves equi-joins and outer joins alone") {
-    import spark.implicits._
-    spark.conf.set(graft.plans.RangeJoinRewrite.ChunkWidthConf, "50")
-    try {
-      val a = Seq((1L, 2.0)).toDF("k", "v")
-      val b = Seq((1L, 0.0, 10.0)).toDF("k", "lo", "hi")
-      // equi key present -> untouched (no Generate in the plan)
-      val equi = a.join(b, a("k") === b("k") && a("v") >= b("lo") && a("v") < b("hi"))
-      assert(!equi.queryExecution.optimizedPlan.toString.contains("_graft_chunk"))
-      assert(equi.count() == 1)
-      // outer join -> untouched
-      val outer = a.join(b, a("v") >= b("lo") && a("v") < b("hi"), "left")
-      assert(!outer.queryExecution.optimizedPlan.toString.contains("_graft_chunk"))
-      assert(outer.count() == 1)
-    } finally spark.conf.unset(graft.plans.RangeJoinRewrite.ChunkWidthConf)
-  }
+class ExtensionsAndPerfSpec extends SparkSpec {
 
   test("MetricsListener collects task metrics around a workload") {
     val store = new LogStore(
