@@ -1,10 +1,20 @@
 package graft.audit
 
+import java.io.IOException
 import java.sql.Timestamp
+import java.util.UUID
 
 import scala.reflect.ClassTag
+import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptContext, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
 
@@ -98,6 +108,12 @@ object SystemClock extends Clock {
   * schema, so lookups on an empty store fail with "not found", not with an
   * unresolved column.
   *
+  * Writes: each event batch is one parquet file that the driver writes
+  * through Spark's own parquet writer, the one a write job's task uses, so
+  * codec, timestamp type and footers follow the session conf as they would
+  * in a job. No plan, job or file committer runs: an audit row costs a few
+  * milliseconds, not a distributed job.
+  *
   * Open-row memo: [[appendRow]] remembers the last version this store
   * appended of each row that is still open (a RUNNING process, an unresolved
   * error), and [[latest]] returns it without a scan. The entry is dropped
@@ -109,7 +125,6 @@ object SystemClock extends Clock {
   * same directory is not seen by this store's memo.
   */
 final class LogStore(val spark: SparkSession, dir: String) {
-  import spark.implicits._
 
   private def path(table: String) = s"$dir/logs/$table"
 
@@ -152,10 +167,46 @@ final class LogStore(val spark: SparkSession, dir: String) {
     }
   }
 
-  def appendEvents(table: String, df: DataFrame): Unit = {
-    df.withColumn("_event_seq", lit(seqFor(table).incrementAndGet()))
-      .coalesce(1) // audit appends are tiny; one file per event batch
-      .write.mode(SaveMode.Append).parquet(path(table))
+  // One parquet writer factory per table, built on the table's first append
+  // from the session conf, as a write job builds it. Each table has its own
+  // Hadoop Job: prepareWrite stores the row schema in the job's conf, and a
+  // conf shared by two tables would hand the later one the other's schema.
+  private val writers =
+    new java.util.concurrent.ConcurrentHashMap[String, (OutputWriterFactory, TaskAttemptContext)]()
+
+  private def writerFor(table: String): (OutputWriterFactory, TaskAttemptContext) =
+    writers.computeIfAbsent(table, t => {
+      val job = Job.getInstance(spark.sessionState.newHadoopConf())
+      val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schemas(t))
+      val attempt = new TaskAttemptID(new TaskID(new JobID(), TaskType.MAP, 0), 0)
+      (factory, new TaskAttemptContextImpl(job.getConfiguration, attempt))
+    })
+
+  /** Appends `rows` as one event batch: one parquet file, every row stamped
+    * with the batch's `_event_seq`. The driver writes the file itself (no
+    * Spark job) under a hidden name, which file listings skip, and renames
+    * it into place; a failed write leaves no visible file and throws naming
+    * the table.
+    */
+  def appendEvents[T <: Product: Encoder](table: String, rows: Seq[T]): Unit = {
+    val (factory, ctx) = writerFor(table)
+    val seq = new GenericInternalRow(Array[Any](seqFor(table).incrementAndGet()))
+    // the serializer reuses its output row: one per call, never shared
+    val toRow = encoderFor[T].createSerializer()
+    val dir = new Path(path(table))
+    val name = s"part-${UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}"
+    val tmp = new Path(dir, s".$name.tmp")
+    val fs = dir.getFileSystem(ctx.getConfiguration)
+    try {
+      val out = factory.newInstance(tmp.toString, schemas(table), ctx)
+      try rows.foreach(r => out.write(new JoinedRow(toRow(r), seq)))
+      finally out.close()
+      if (!fs.rename(tmp, new Path(dir, name))) throw new IOException(s"cannot rename $tmp to $name")
+    } catch {
+      case NonFatal(e) =>
+        try fs.delete(tmp, false) catch { case NonFatal(d) => e.addSuppressed(d) }
+        throw new IOException(s"append to log table $table failed: ${e.getMessage}", e)
+    }
   }
 
   def exists(table: String): Boolean = {
@@ -185,7 +236,7 @@ final class LogStore(val spark: SparkSession, dir: String) {
     * `open`; a closed version drops the row's entry.
     */
   private[audit] def appendRow[T <: Product: Encoder](table: String, id: Long, row: T, open: Boolean): Unit = {
-    appendEvents(table, Seq(row).toDF())
+    appendEvents(table, Seq(row))
     if (open) openRows.put((table, id), row) else openRows.remove((table, id))
   }
 
@@ -394,10 +445,17 @@ final class PerformanceMonitor(store: LogStore, clock: Clock = SystemClock) {
       name: String,
       value: Double,
       unit: String,
-      processLogId: Option[Long] = None): Unit = {
-    val id = store.nextId(table, "metric_id")
-    store.appendEvents(table,
-      Seq(PerformanceMetric(id, processLogId, name, value, unit, clock.now())).toDF())
+      processLogId: Option[Long] = None): Unit =
+    recordAll(Seq((name, value, unit)), processLogId)
+
+  /** Records `(name, value, unit)` metrics as one event batch: one file,
+    * one `metric_id` per metric, one measurement time.
+    */
+  def recordAll(metrics: Seq[(String, Double, String)], processLogId: Option[Long] = None): Unit = {
+    val now = clock.now()
+    store.appendEvents(table, metrics.map { case (name, value, unit) =>
+      PerformanceMetric(store.nextId(table, "metric_id"), processLogId, name, value, unit, now)
+    })
   }
 
   /** Loan-pattern timer: records `<name>_execution_time` in seconds. */
@@ -461,7 +519,7 @@ final class ConfigurationLogger(store: LogStore, clock: Clock = SystemClock) {
       environment: String = "dev"): Unit = {
     val id = store.nextId(table, "config_log_id")
     store.appendEvents(table,
-      Seq(ConfigurationLog(id, key, oldValue, newValue, reason, by, clock.now(), environment)).toDF())
+      Seq(ConfigurationLog(id, key, oldValue, newValue, reason, by, clock.now(), environment)))
   }
 
   def history(key: Option[String] = None): DataFrame = {
@@ -585,7 +643,7 @@ final class LineageTracker(store: LogStore, clock: Clock = SystemClock) {
     val id = store.nextId(table, "lineage_id")
     store.appendEvents(table,
       Seq(DataLineageEdge(id, processLogId, sourceSchema, sourceTable,
-        targetSchema, targetTable, logic, recordCount, clock.now())).toDF())
+        targetSchema, targetTable, logic, recordCount, clock.now())))
   }
 
   def edges(): DataFrame =

@@ -128,11 +128,6 @@ object Bronze {
       batchId: String,
       durationSec: Double)
 
-  /** End-to-end bronze load (bronze.py:389-591): read → enrich → append to
-    * `<warehouseDir>/bronze/<table>`; returns the reference's result shape.
-    * Partial-failure tolerance and audit logging live in the orchestration
-    * layer (graft.audit / graft.app).
-    */
   /** How long a load waits, after its write returned, for the write's row
     * count to arrive over the listener bus.
     */
@@ -145,6 +140,11 @@ object Bronze {
 
     def tablePath(table: String): String = s"$warehouseDir/bronze/$table"
 
+    /** End-to-end bronze load (bronze.py:389-591): read → enrich → append to
+      * `<warehouseDir>/bronze/<table>`; returns the reference's result shape.
+      * Partial-failure tolerance and audit logging live in the orchestration
+      * layer (graft.audit / graft.app).
+      */
     def loadCsvToBronze(csvPath: String, table: String, source: String): LoadResult = {
       val t0 = System.nanoTime()
       val batch = batchId(source, idGen)

@@ -67,23 +67,24 @@ final class MetricsListener extends SparkListener {
     }
   }
 
-  /** Metric name → (value, unit), ready for PerformanceMonitor.record. */
-  def snapshot(): Map[String, (Double, String)] = Map(
-    "tasks_completed" -> (tasksCompleted.get.toDouble, "count"),
-    "stages_completed" -> (stagesCompleted.get.toDouble, "count"),
-    "jobs_completed" -> (jobsCompleted.get.toDouble, "count"),
-    "executor_run_time" -> (executorRunTimeMs.get / 1000.0, "sec"),
-    "executor_cpu_time" -> (executorCpuTimeMs.get / 1000.0, "sec"),
-    "jvm_gc_time" -> (jvmGcTimeMs.get / 1000.0, "sec"),
-    "shuffle_read" -> (shuffleReadBytes.get.toDouble, "bytes"),
-    "shuffle_write" -> (shuffleWriteBytes.get.toDouble, "bytes"),
-    "memory_spilled" -> (memoryBytesSpilled.get.toDouble, "bytes"),
-    "records_read" -> (recordsRead.get.toDouble, "count"))
+  /** (metric name, value, unit), ready for PerformanceMonitor.recordAll. */
+  def snapshot(): Seq[(String, Double, String)] = Seq(
+    ("tasks_completed", tasksCompleted.get.toDouble, "count"),
+    ("stages_completed", stagesCompleted.get.toDouble, "count"),
+    ("jobs_completed", jobsCompleted.get.toDouble, "count"),
+    ("executor_run_time", executorRunTimeMs.get / 1000.0, "sec"),
+    ("executor_cpu_time", executorCpuTimeMs.get / 1000.0, "sec"),
+    ("jvm_gc_time", jvmGcTimeMs.get / 1000.0, "sec"),
+    ("shuffle_read", shuffleReadBytes.get.toDouble, "bytes"),
+    ("shuffle_write", shuffleWriteBytes.get.toDouble, "bytes"),
+    ("memory_spilled", memoryBytesSpilled.get.toDouble, "bytes"),
+    ("records_read", recordsRead.get.toDouble, "count"))
 }
 
 object MetricsListener {
   /** Attach a fresh listener, run `f`, detach, and record every collected
-    * metric through the monitor (loan pattern around a workload).
+    * metric through the monitor as one event batch (loan pattern around a
+    * workload).
     */
   def measuring[T](
       spark: org.apache.spark.sql.SparkSession,
@@ -95,9 +96,7 @@ object MetricsListener {
     finally {
       listener.settle()
       spark.sparkContext.removeSparkListener(listener)
-      listener.snapshot().foreach { case (name, (value, unit)) =>
-        monitor.record(name, value, unit, processLogId)
-      }
+      monitor.recordAll(listener.snapshot(), processLogId)
     }
   }
 }

@@ -26,6 +26,10 @@ class ExtensionsAndPerfSpec extends SparkSpec {
     assert(recorded("tasks_completed") > 0)
     assert(recorded("jobs_completed") >= 1)
     assert(recorded.contains("shuffle_read") && recorded.contains("executor_run_time"))
+    // the snapshot is one event batch: one file, one metric_id per metric
+    val batch = store.events("performance_metrics")
+    assert(batch.select(input_file_name()).distinct().count() == 1)
+    assert(batch.select("metric_id").distinct().count() == recorded.size)
   }
 
   test("bucketed tables join without a shuffle exchange") {

@@ -14,12 +14,14 @@ class PlanAuditSpec extends SparkSpec {
   // INVOKING a query function is not free — the stream-path queries run
   // their whole foreachBatch pipeline eagerly before returning the
   // read-back frame — so each audit re-running all 200+ functions would
-  // pay the multi-second streaming cost once PER TEST.
-  private lazy val executedPlans
-      : Seq[(String, org.apache.spark.sql.execution.SparkPlan)] =
-    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+  // pay the multi-second streaming cost once PER TEST. The attempt is kept
+  // as a Try: a lazy val that throws is evaluated again on the next access,
+  // so a failing query would re-plan the whole contract in every test.
+  private lazy val planned =
+    scala.util.Try(SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       name -> fn(spark, Sf0001).queryExecution.executedPlan
-    }
+    })
+  private def executedPlans: Seq[(String, org.apache.spark.sql.execution.SparkPlan)] = planned.get
   private lazy val planByName = executedPlans.toMap
 
   test("no query plans a cartesian product or an unintended nested-loop join") {

@@ -24,10 +24,12 @@ class CosineSimilaritySpec extends SparkSpec {
   test("registered SQL function works and null-propagates") {
     CosineSimilarity.register(spark)
     Seq((Seq(1.0, 0.0), Seq(0.0, 1.0))).toDF("a", "b").createOrReplaceTempView("v")
-    val orth = spark.sql("SELECT cosine_similarity(a, b) AS c FROM v").head().getDouble(0)
-    assert(orth == 0.0)
-    val n = spark.sql("SELECT cosine_similarity(NULL, b) AS c FROM v").head()
-    assert(n.isNullAt(0))
+    try {
+      val orth = spark.sql("SELECT cosine_similarity(a, b) AS c FROM v").head().getDouble(0)
+      assert(orth == 0.0)
+      val n = spark.sql("SELECT cosine_similarity(NULL, b) AS c FROM v").head()
+      assert(n.isNullAt(0))
+    } finally spark.catalog.dropTempView("v")
   }
 
   test("interpreted eval path matches codegen (mixed float/double arrays)") {

@@ -28,9 +28,11 @@ class QuantizedDotSpec extends SparkSpec {
   test("registered SQL function works, int arrays accepted, null-propagates") {
     QuantizedDot.register(spark)
     Seq((Seq(1, -2, 3), Seq(4L, 5L, 6L))).toDF("a", "b").createOrReplaceTempView("qd_v")
-    val mixed = spark.sql("SELECT quantized_dot(a, b) AS d FROM qd_v").head().getLong(0)
-    assert(mixed == 1L * 4 - 2L * 5 + 3L * 6)
-    assert(spark.sql("SELECT quantized_dot(NULL, b) AS d FROM qd_v").head().isNullAt(0))
+    try {
+      val mixed = spark.sql("SELECT quantized_dot(a, b) AS d FROM qd_v").head().getLong(0)
+      assert(mixed == 1L * 4 - 2L * 5 + 3L * 6)
+      assert(spark.sql("SELECT quantized_dot(NULL, b) AS d FROM qd_v").head().isNullAt(0))
+    } finally spark.catalog.dropTempView("qd_v")
   }
 
   test("interpreted eval matches hand arithmetic; type check rejects floats") {
