@@ -1254,8 +1254,8 @@ object SparkEntry {
           |FROM ssilver""".stripMargin),
     "q77_gold_customer_analytics" ->
       ("WITH " + silverSalesCtes + ",\n" +
-        """craw AS (
-          |  SELECT * FROM read_csv('/root/reference/datasets/source_crm/cust_info.csv', header=true, all_varchar=true)),
+        s"""craw AS (
+          |  SELECT * FROM ${refCsv("source_crm/cust_info.csv")}),
           |ctyped AS (
           |  SELECT CAST(cst_id AS BIGINT) AS cst_id,
           |    trim(cst_firstname) AS cst_firstname, trim(cst_lastname) AS cst_lastname,
@@ -1287,8 +1287,8 @@ object SparkEntry {
           |       ELSE 'Prospect' END AS customer_segment
           |FROM cdedup c LEFT JOIN percust p ON c.cst_id = p.sls_cust_id""".stripMargin),
     "q78_silver_products" ->
-      """WITH praw AS (
-        |  SELECT * FROM read_csv('/root/reference/datasets/source_crm/prd_info.csv', header=true, all_varchar=true))
+      s"""WITH praw AS (
+        |  SELECT * FROM ${refCsv("source_crm/prd_info.csv")})
         |SELECT CAST(prd_id AS BIGINT) AS prd_id,
         |  replace(substr(prd_key, 1, 5), '-', '_') AS cat_id,
         |  substr(prd_key, 7) AS prd_key,
@@ -1303,8 +1303,8 @@ object SparkEntry {
         |  CAST(prd_end_dt AS DATE) AS prd_end_dt
         |FROM praw""".stripMargin,
     "q79_silver_erp_customers" ->
-      """WITH eraw AS (
-        |  SELECT * FROM read_csv('/root/reference/datasets/source_erp/CUST_AZ12.csv', header=true, all_varchar=true)),
+      s"""WITH eraw AS (
+        |  SELECT * FROM ${refCsv("source_erp/CUST_AZ12.csv")}),
         |ecust AS (
         |  SELECT CASE WHEN trim(CID) LIKE 'NAS%' THEN substr(trim(CID), 4) ELSE trim(CID) END AS cid,
         |    CASE WHEN CAST(BDATE AS DATE) > DATE '2026-01-01' THEN NULL ELSE CAST(BDATE AS DATE) END AS bdate,
@@ -1313,7 +1313,7 @@ object SparkEntry {
         |         ELSE 'n/a' END AS gen
         |  FROM eraw),
         |lraw AS (
-        |  SELECT * FROM read_csv('/root/reference/datasets/source_erp/LOC_A101.csv', header=true, all_varchar=true)),
+        |  SELECT * FROM ${refCsv("source_erp/LOC_A101.csv")}),
         |eloc AS (
         |  SELECT replace(trim(CID), '-', '') AS cid,
         |    CASE WHEN upper(trim(CNTRY)) IN ('DE', 'GERMANY') THEN 'Germany'
@@ -4811,15 +4811,22 @@ object SparkEntry {
         |ORDER BY doc_id""".stripMargin,
   )
 
+  /** DuckDB scan of one reference CSV (q76–q79), resolved against
+    * [[Medallion.ReferenceRoot]] at call time so the oracle reads the same
+    * files as the Spark side, override included.
+    */
+  private def refCsv(file: String): String =
+    s"read_csv('${Medallion.ReferenceRoot}/$file', header=true, all_varchar=true)"
+
   /** Shared q76/q77 oracle prefix: the silver.crm_sales cleaning rules
     * (Silver.cleanCrmSales) replicated stage by stage over the raw CSV —
     * trim keys, cast numerics, 0-sentinel yyyymmdd dates, sales repair to
     * qty × |price| on null/non-positive/mismatch, price back-derivation.
     * Ends with CTE `ssilver(sls_ord_num … sls_price)`.
     */
-  private val silverSalesCtes: String =
-    """sraw AS (
-      |  SELECT * FROM read_csv('/root/reference/datasets/source_crm/sales_details.csv', header=true, all_varchar=true)),
+  private def silverSalesCtes: String =
+    s"""sraw AS (
+      |  SELECT * FROM ${refCsv("source_crm/sales_details.csv")}),
       |styped AS (
       |  SELECT trim(sls_ord_num) AS sls_ord_num, trim(sls_prd_key) AS sls_prd_key,
       |    CAST(sls_cust_id AS BIGINT) AS sls_cust_id,

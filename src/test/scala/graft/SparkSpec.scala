@@ -22,4 +22,14 @@ trait SparkSpec extends AnyFunSuite {
   }
 
   val Sf0001 = "/root/testdata/sf0.001"
+
+  /** Cancels the test unless each of `dirs` (e.g. `source_crm`) is a
+    * directory under [[graft.queries.Medallion.ReferenceRoot]]: the
+    * reference-CSV tests assert counts of the reference checkout's own files,
+    * so they run wherever that checkout is and nowhere else.
+    */
+  def assumeReferenceCsvs(dirs: String*): Unit = dirs.foreach { d =>
+    val dir = java.nio.file.Paths.get(graft.queries.Medallion.ReferenceRoot, d)
+    assume(java.nio.file.Files.isDirectory(dir), s"reference checkout absent: $dir")
+  }
 }

@@ -3,18 +3,20 @@ package graft.app
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.queries.Medallion
 
 class OrchestratorSpec extends SparkSpec {
   import spark.implicits._
 
   test("full pipeline: setup → bronze → silver → gold with audit trail") {
+    assumeReferenceCsvs("source_crm")
     val dir = java.nio.file.Files.createTempDirectory("graft-wh").toString
     val orch = new SetupOrchestrator(spark, dir)
 
     val setup = orch.runCompleteSetup()
     assert(setup.forall(_.ok), setup.mkString("; "))
 
-    val bronze = orch.runBronze("/root/reference/datasets", "crm")
+    val bronze = orch.runBronze(Medallion.ReferenceRoot, "crm")
     assert(bronze.forall(_.isSuccess))
     assert(bronze.map(_.get.rowsLoaded).sum == 18494 + 397 + 60398)
 

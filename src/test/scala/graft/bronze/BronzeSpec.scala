@@ -3,11 +3,12 @@ package graft.bronze
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.queries.Medallion
 
 class BronzeSpec extends SparkSpec {
   import spark.implicits._
 
-  val CustInfo = "/root/reference/datasets/source_crm/cust_info.csv"
+  val CustInfo = s"${Medallion.ReferenceRoot}/source_crm/cust_info.csv"
 
   object FixedIdGen extends Bronze.IdGen {
     def now() = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
@@ -15,6 +16,7 @@ class BronzeSpec extends SparkSpec {
   }
 
   test("csv inference contract: ints → LongType-compatible, text → StringType") {
+    assumeReferenceCsvs("source_crm")
     val df = Bronze.readCsv(spark, CustInfo)
     val types = df.schema.fields.map(f => f.name -> f.dataType.typeName).toMap
     assert(Set("integer", "long").contains(types("cst_id")), types.toString)
@@ -22,6 +24,7 @@ class BronzeSpec extends SparkSpec {
   }
 
   test("reference data dirt profile matches FIXTURES.md") {
+    assumeReferenceCsvs("source_crm")
     val df = Bronze.readCsv(spark, CustInfo)
     // NOTE: FIXTURES.md says 18,493 rows / 7 blanks / 6 dup ids, but those
     // were wc-derived; the file has no trailing newline. Empirical truth:
@@ -81,6 +84,7 @@ class BronzeSpec extends SparkSpec {
   }
 
   test("end-to-end bronze load writes enriched parquet with all metadata") {
+    assumeReferenceCsvs("source_crm")
     val dir = java.nio.file.Files.createTempDirectory("graft-bronze").toString
     val mgr = new Bronze.BronzeManager(spark, dir, FixedIdGen)
     val res = mgr.loadCsvToBronze(CustInfo, "crm_customers_raw", "CRM")

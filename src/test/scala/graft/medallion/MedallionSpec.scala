@@ -4,13 +4,14 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.bronze.Bronze
+import graft.queries.Medallion
 
 /** Silver/gold rules exercised against the reference's actual dirty CSVs —
   * the profiled quirk counts come from FIXTURES.md §1.
   */
 class MedallionSpec extends SparkSpec {
 
-  private lazy val datasets = "/root/reference/datasets"
+  private lazy val datasets = Medallion.ReferenceRoot
   private lazy val custRaw = Bronze.readCsv(spark, s"$datasets/source_crm/cust_info.csv")
   private lazy val salesRaw = Bronze.readCsv(spark, s"$datasets/source_crm/sales_details.csv")
   private lazy val erpCustRaw = Bronze.readCsv(spark, s"$datasets/source_erp/CUST_AZ12.csv")
@@ -18,6 +19,7 @@ class MedallionSpec extends SparkSpec {
   private lazy val prodRaw = Bronze.readCsv(spark, s"$datasets/source_crm/prd_info.csv")
 
   test("silver customers: null keys dropped, duplicates collapsed, names trimmed") {
+    assumeReferenceCsvs("source_crm")
     val silver = Silver.cleanCrmCustomers(custRaw)
     val n = silver.count()
     assert(n == 18494 - 4 - 6, s"18484 expected after 4 null-id and 6 dup-surplus drops, got $n")
@@ -28,6 +30,7 @@ class MedallionSpec extends SparkSpec {
   }
 
   test("silver sales: 0-sentinel dates null, sales equation repaired") {
+    assumeReferenceCsvs("source_crm")
     val silver = Silver.cleanCrmSales(salesRaw)
     assert(silver.count() == 60398)
     // 17 zero-sentinels + 2 stray garbage values (e.g. 32154) → 19 nulls
@@ -39,6 +42,7 @@ class MedallionSpec extends SparkSpec {
   }
 
   test("silver erp customers: NAS prefixes stripped, future birthdates nulled") {
+    assumeReferenceCsvs("source_erp", "source_crm")
     val silver = Silver.cleanErpCustomers(erpCustRaw)
     assert(silver.where(col("cid").startsWith("NAS")).count() == 0)
     assert(silver.where(col("bdate") > current_date()).count() == 0)
@@ -49,6 +53,7 @@ class MedallionSpec extends SparkSpec {
   }
 
   test("silver erp locations: dashes removed, countries unified") {
+    assumeReferenceCsvs("source_erp")
     val silver = Silver.cleanErpLocations(erpLocRaw)
     assert(silver.where(col("cid").contains("-")).count() == 0)
     val countries = silver.groupBy("cntry").count().collect()
@@ -59,6 +64,7 @@ class MedallionSpec extends SparkSpec {
   }
 
   test("silver products: category id joins the 36-row dimension") {
+    assumeReferenceCsvs("source_crm", "source_erp")
     val silver = Silver.cleanCrmProducts(prodRaw)
     val cats = Bronze.readCsv(spark, s"$datasets/source_erp/PX_CAT_G1V2.csv")
     val matched = silver.join(broadcast(cats), col("cat_id") === col("ID"), "inner").count()
@@ -66,6 +72,7 @@ class MedallionSpec extends SparkSpec {
   }
 
   test("gold customer analytics: KPIs aggregate and segment") {
+    assumeReferenceCsvs("source_crm")
     val gold = Gold.customerAnalytics(
       Silver.cleanCrmCustomers(custRaw),
       Silver.cleanCrmSales(salesRaw))
@@ -94,6 +101,8 @@ class MedallionSpec extends SparkSpec {
       val rows = graft.queries.Medallion.crmCustomersRaw(spark).collect()
       assert(rows.length == 1 && rows.head.getString(2) == "Ann",
         "the raw reader must resolve against the overridden root")
+      assert(graft.SparkEntry.oracleSql("q76_silver_sales").contains(tmp.getAbsolutePath),
+        "the q76 oracle must read the overridden root too")
     } finally prev match {
       case Some(v) => sys.props("graft.reference.datasets") = v
       case None    => sys.props.remove("graft.reference.datasets")
