@@ -302,8 +302,8 @@ object SparkEntry {
       |  FROM documents WHERE doc_id % 3 = 2 AND doc_id % 17 <> 0)""".stripMargin
 
   /** The supplier→nation→region WITH RECURSIVE traversal oracle — shared
-    * VERBATIM by q27 (the iterative driver-loop traversal) and q250 (the
-    * same walk as literal Spark recursive-CTE SQL text), so all three
+    * VERBATIM by q27 (the one-plan level-by-level join traversal) and q250
+    * (the same walk as literal Spark recursive-CTE SQL text), so all three
     * recursion engines are pinned to one answer.
     */
   private val q27TraversalOracle: String =
@@ -2511,7 +2511,7 @@ object SparkEntry {
     // detection distributes over the delta, so stream must equal batch
     "q249_streaming_spans" -> q243SpanOracle,
     // Spark-native WITH RECURSIVE: the q27 oracle verbatim — the rCTE
-    // text, the iterative driver loop, and DuckDB pinned to one answer
+    // text, the one-plan level-join traversal, and DuckDB pinned to one answer
     "q250_sql_recursive" -> q27TraversalOracle,
     // span-index fold: the q243 oracle VERBATIM — the true-count sidecar
     // makes the two-generation fold equal the from-scratch rebuild

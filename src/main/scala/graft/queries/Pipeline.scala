@@ -165,10 +165,10 @@ object Pipeline {
 
   // ----------------------------------------------------------------- graph
 
-  /** q27 — iterative graph reachability (the recursive-CTE replacement,
-    * reference `logs/data_lineage.py:358-470`): supplier→nation→region edge
-    * walk with depth tracking and cycle guard, verified against a real
-    * WITH RECURSIVE oracle.
+  /** q27 — graph reachability (the recursive-CTE replacement, reference
+    * `logs/data_lineage.py:358-470`): supplier→nation→region edge walk with
+    * depth tracking and cycle guard as one lazy plan of per-level joins,
+    * verified against a real WITH RECURSIVE oracle.
     */
   def graphReachability(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
@@ -5901,13 +5901,13 @@ object Pipeline {
     * (PlanAuditSpec pins it); the depth cap is the textual
     * `WHERE depth < 5` guard, and MIN(depth) per (seed, node) equals
     * [[graft.lineage.Lineage.reachable]] on every node ≠ seed row of ANY
-    * graph — a shortest path never revisits a node, so the driver-loop's
-    * path-array guard prunes only longer walks. The one semantic
+    * graph — a shortest path never revisits a node, so the level-join
+    * traversal's path-array guard prunes only longer walks. The one semantic
     * divergence is a cycle THROUGH a seed (the rCTE walks back to it, the
     * path guard blocks re-entry); RecursiveSqlSpec pins both the
     * agreement and that exact divergence on a cyclic graph. This fixture
     * graph is acyclic, so here all three recursion engines (Spark rCTE,
-    * the iterative driver loop, DuckDB's rCTE oracle — shared verbatim
+    * the level-join traversal, DuckDB's rCTE oracle — shared verbatim
     * with q27) are pinned to one answer.
     */
   def sqlTextRecursiveTraversal(spark: SparkSession, dir: String): DataFrame = {
@@ -5956,7 +5956,7 @@ object Pipeline {
     * PROVABLY past the fixpoint — and bounded out-degree is itself part
     * of the documented contract (on a high-out-degree cyclic graph the
     * UNION ALL rewrite's path count explodes where UNION's dedup would
-    * not; such graphs must use the iterative [[graft.lineage.Lineage]]
+    * not; such graphs must use the path-guarded [[graft.lineage.Lineage]]
     * traversal instead).
     */
   def sqlTextRecursiveFixpoint(spark: SparkSession, dir: String): DataFrame = {

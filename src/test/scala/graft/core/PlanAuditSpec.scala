@@ -127,6 +127,23 @@ class PlanAuditSpec extends SparkSpec {
       "the textual depth cap must appear as a filter INSIDE the loop body")
   }
 
+  test("q27's lineage walk plans as one query: no checkpointed RDD scan") {
+    // a driver-side walk that checkpoints each level leaves a scan of the
+    // checkpointed RDD (RDDScanExec) where the level's join should be; the
+    // one-plan walk joins down to the supplier and nation scans
+    import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+    }
+    val all = nodes(planByName("q27_graph_traversal"))
+    val rddScans = all.collect { case r: RDDScanExec => r.simpleString(200) }
+    assert(rddScans.isEmpty, s"q27 plans checkpointed RDD scans:\n${rddScans.mkString("\n")}")
+    assert(all.exists(_.isInstanceOf[FileSourceScanExec]),
+      "q27's plan must read its source tables")
+  }
+
   test("no window sorts a fact-sized frame under a low-cardinality-only partition key") {
     // The single-partition-window scale-killer: row_number()/rank() OVER
     // (PARTITION BY <few-valued column> ORDER BY …) on an UNAGGREGATED fact

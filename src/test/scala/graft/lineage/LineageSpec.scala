@@ -1,5 +1,8 @@
 package graft.lineage
 
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+
 import graft.SparkSpec
 
 class LineageSpec extends SparkSpec {
@@ -87,5 +90,64 @@ class LineageSpec extends SparkSpec {
     val recsNarrow = Lineage.impact(narrow, "src", "dst", Seq("hub").toDF("seed"), "seed")
       .collect().head.getAs[scala.collection.Seq[String]]("recommendations")
     assert(recsNarrow == Seq("LOW IMPACT: Standard change management processes apply"))
+  }
+
+  test("building the walk is lazy: no Spark job, nothing persisted") {
+    val sc = spark.sparkContext
+    val persisted = sc.getPersistentRDDs.keySet.toSet
+    val (built, jobs) = countingJobs(Seq(
+      Lineage.reachable(edges, "src", "dst", seeds, "seed", maxDepth = 5),
+      Lineage.impact(edges, "src", "dst", seeds, "seed")))
+    assert(jobs == 0, s"building the walk ran $jobs Spark jobs")
+    assert(sc.getPersistentRDDs.keySet.toSet == persisted)
+    built.foreach(_.collect())
+    assert(sc.getPersistentRDDs.keySet.toSet == persisted,
+      "collecting the walk left RDDs persisted")
+  }
+
+  /** Breadth-first reference walk: every path from a distinct seed over the
+    * distinct edges, one edge per level up to `maxDepth`, that never
+    * revisits a node already on it (the seed included).
+    */
+  private def referenceWalk(
+      graph: Seq[(String, String)],
+      seedNodes: Seq[String],
+      maxDepth: Int): Seq[(String, String, Int, List[String])] = {
+    val next = graph.distinct.groupMap(_._1)(_._2)
+    seedNodes.distinct.flatMap { s =>
+      Iterator
+        .iterate(Seq(List(s)))(_.flatMap(p =>
+          next.getOrElse(p.last, Nil).filterNot(p.contains).map(p :+ _)))
+        .slice(1, maxDepth + 1)
+        .flatten
+        .map(p => (s, p.last, p.size - 1, p))
+    }
+  }
+
+  test("traverse equals a breadth-first reference walk on random cyclic graphs (property, 21 cases)") {
+    // up to 8 nodes: self-loops, duplicate edges and cycles all occur, and
+    // every maxDepth from 0 to 6 is taken three times
+    val node = Gen.chooseNum(0, 7).map(i => s"n$i")
+    val gen = for {
+      n <- Gen.chooseNum(0, 16)
+      graph <- Gen.listOfN(n, Gen.zip(node, node))
+      k <- Gen.chooseNum(1, 3)
+      seedNodes <- Gen.listOfN(k, node)
+    } yield (graph, seedNodes)
+    val cases = (0 until 21).flatMap(i =>
+      gen.apply(Gen.Parameters.default, Seed(7L + i)).map(c => (c, i % 7)))
+    assert(cases.size == 21)
+    val nonTrivial = cases.count { case ((graph, seedNodes), maxDepth) =>
+      val got = Lineage
+        .traverse(graph.toDF("src", "dst"), "src", "dst", seedNodes.toDF("seed"), "seed", maxDepth)
+        .collect().toSeq
+        .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getSeq[String](3).toList))
+      val want = referenceWalk(graph, seedNodes, maxDepth)
+      assert(got.sortBy(_.toString) == want.sortBy(_.toString),
+        s"graph=$graph seeds=$seedNodes maxDepth=$maxDepth")
+      want.exists(_._3 >= 2)
+    }
+    // non-vacuous: several cases walk past the first level
+    assert(nonTrivial >= 5, s"only $nonTrivial cases reach depth 2")
   }
 }

@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Pins Spark 4.1's native recursive CTE (the q250 SQL-text surface)
-  * against the iterative driver-loop traversal — INCLUDING the one place
+  * against the one-plan level-join traversal — INCLUDING the one place
   * their semantics legitimately differ, so the difference is a documented
   * contract instead of a latent surprise.
   *
