@@ -1,8 +1,11 @@
 package graft.app
 
-import scala.util.{Failure, Success, Try}
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import scala.util.{Failure, Success, Try}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 import graft.audit._
 import graft.bronze.Bronze
@@ -17,6 +20,21 @@ import graft.medallion.{Gold, PartitionedFact, Silver}
   * with process/audit/lineage logging around every load — the same hard
   * ordering constraint as the reference (logs tables must exist before any
   * audit write, main.py:235-311).
+  *
+  * Within a layer the steps are independent — each bronze load reads its own
+  * CSV, each silver build its own bronze table — so they run concurrently,
+  * one thread each, and share the cluster instead of queueing: a step is a
+  * few short Spark jobs with driver work in between, and run one at a time
+  * they leave the executors idle most of the layer. The layers themselves
+  * stay barriers: silver starts after bronze returns, gold after silver.
+  *
+  * Audit stays on the calling thread. [[LogStore]] is single-writer (id and
+  * `_event_seq` counters, one writer per table, the open-row memo), so pool
+  * threads run only the Spark work; the caller opens every step's process
+  * first, then writes each step's lineage, metric and close in step order as
+  * the steps finish. Process, lineage, metric and error ids are therefore the
+  * same as in a sequential run, and in `process_log` a layer's starts precede
+  * its ends.
   */
 final class SetupOrchestrator(
     spark: SparkSession,
@@ -98,7 +116,10 @@ final class SetupOrchestrator(
   /** Bronze ingestion with full observability (the reference's
     * load_csv_to_bronze flow, bronze.py:389-591): process log → load →
     * lineage edge → throughput metric → process close; per-source
-    * partial-failure tolerance.
+    * partial-failure tolerance. The loads run concurrently (see the class
+    * doc), so each `rows_per_second` metric is that load's own throughput
+    * while it shared the cluster with the others. Returns the outcomes in
+    * load order.
     */
   def runBronze(datasetsDir: String, source: String = "all"): Seq[Try[Bronze.LoadResult]] = {
     val mgr = new Bronze.BronzeManager(spark, warehouseDir)
@@ -116,28 +137,28 @@ final class SetupOrchestrator(
         (s"$datasetsDir/source_erp/LOC_A101.csv", "erp_locations_raw", "ERP"),
         (s"$datasetsDir/source_erp/PX_CAT_G1V2.csv", "erp_product_categories_raw", "ERP"))
     }
-    loads.map { case (csv, table, src) =>
-      val pid = processes.startProcess(s"bronze_load_$table", s"CSV → bronze.$table",
-        Some(src), Some("bronze"))
-      val res = Try(mgr.loadCsvToBronze(csv, table, src))
-      res match {
-        case Success(r) =>
-          lineage.recordEdge("source", new java.io.File(csv).getName, "bronze", table,
-            Some(pid), Some("csv_ingestion"), Some(r.rowsLoaded))
-          perf.record("rows_per_second",
-            if (r.durationSec > 0) r.rowsLoaded / r.durationSec else 0.0, "rows/sec", Some(pid))
-          processes.endProcess(pid, "SUCCESS", rowsProcessed = Some(r.rowsLoaded),
-            rowsInserted = Some(r.rowsLoaded))
-        case Failure(e) =>
-          errors.logException(e, Some(pid))
-          processes.endProcess(pid, "FAILED", errorMessage = Some(e.getMessage))
-      }
-      res
+    val pids = loads.map { case (_, table, src) =>
+      processes.startProcess(s"bronze_load_$table", s"CSV → bronze.$table", Some(src), Some("bronze"))
+    }
+    concurrently(loads.zip(pids))({ case ((csv, table, src), _) =>
+      mgr.loadCsvToBronze(csv, table, src)
+    }) {
+      case (((csv, table, _), pid), Success(r)) =>
+        lineage.recordEdge("source", new java.io.File(csv).getName, "bronze", table,
+          Some(pid), Some("csv_ingestion"), Some(r.rowsLoaded))
+        perf.record("rows_per_second",
+          if (r.durationSec > 0) r.rowsLoaded / r.durationSec else 0.0, "rows/sec", Some(pid))
+        processes.endProcess(pid, "SUCCESS", rowsProcessed = Some(r.rowsLoaded),
+          rowsInserted = Some(r.rowsLoaded))
+      case ((_, pid), Failure(e)) => logFailure(pid, e)
     }
   }
 
   /** Silver build from whichever bronze tables exist (per-source tolerance,
-    * as the reference's partial-failure handling), with lineage.
+    * as the reference's partial-failure handling), with lineage. The builds
+    * run concurrently (see the class doc). A failed build is logged and its
+    * process closed FAILED; once every build has finished, the first failure
+    * in build order is rethrown.
     */
   def runSilver(granularity: PartitionedFact.Granularity = PartitionedFact.Year): Unit = {
     def bronzeTable(t: String) = spark.read.parquet(s"$warehouseDir/bronze/$t")
@@ -147,47 +168,85 @@ final class SetupOrchestrator(
       val p = new org.apache.hadoop.fs.Path(s"$warehouseDir/bronze/$t")
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
     }
-    def write(bronzeName: String, name: String,
-        clean: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit =
-      if (exists(bronzeName)) {
-        val pid = processes.startProcess(s"silver_build_$name", "", None, Some("silver"))
-        clean(bronzeTable(bronzeName))
-          .write.mode(SaveMode.Overwrite).parquet(s"$warehouseDir/silver/$name")
-        lineage.recordEdge("bronze", bronzeName, "silver", name, Some(pid), Some("cleansing"))
-        processes.endProcess(pid, "SUCCESS")
-      }
-    write("crm_customers_raw", "crm_customers", Silver.cleanCrmCustomers)
-    write("crm_products_raw", "crm_products", Silver.cleanCrmProducts)
+    def write(clean: DataFrame => DataFrame): (DataFrame, String) => Unit = (bronze, name) =>
+      clean(bronze).write.mode(SaveMode.Overwrite).parquet(s"$warehouseDir/silver/$name")
     // The sales fact is date-partitioned (the reference RANGE-partitions on
     // the creation date, ddl.py:199-206): date-bounded queries prune whole
     // partitions instead of scanning the fact table. The granularity knob
     // picks year (sane file counts at small SF) through month/day (the
     // 100 TB settings); incremental loads land via
     // PartitionedFact.mergeDelta, rewriting only touched partitions.
-    if (exists("crm_sales_raw")) {
-      val pid = processes.startProcess("silver_build_crm_sales", "", None, Some("silver"))
-      PartitionedFact.overwrite(
-        Silver.cleanCrmSales(bronzeTable("crm_sales_raw")),
+    val writeSales: (DataFrame, String) => Unit = (bronze, name) =>
+      PartitionedFact.overwrite(Silver.cleanCrmSales(bronze),
         dateCol = "sls_order_dt", prefix = "order", g = granularity,
-        path = s"$warehouseDir/silver/crm_sales")
-      lineage.recordEdge("bronze", "crm_sales_raw", "silver", "crm_sales", Some(pid), Some("cleansing"))
-      processes.endProcess(pid, "SUCCESS")
+        path = s"$warehouseDir/silver/$name")
+    val builds: Seq[(String, String, (DataFrame, String) => Unit)] = Seq(
+      ("crm_customers_raw", "crm_customers", write(Silver.cleanCrmCustomers)),
+      ("crm_products_raw", "crm_products", write(Silver.cleanCrmProducts)),
+      ("crm_sales_raw", "crm_sales", writeSales),
+      ("erp_customers_raw", "erp_customers", write(Silver.cleanErpCustomers)),
+      ("erp_locations_raw", "erp_locations", write(Silver.cleanErpLocations))
+    ).filter { case (bronzeName, _, _) => exists(bronzeName) }
+    val pids = builds.map { case (_, name, _) =>
+      processes.startProcess(s"silver_build_$name", "", None, Some("silver"))
     }
-    write("erp_customers_raw", "erp_customers", Silver.cleanErpCustomers)
-    write("erp_locations_raw", "erp_locations", Silver.cleanErpLocations)
+    concurrently(builds.zip(pids))({ case ((bronzeName, name, build), _) =>
+      build(bronzeTable(bronzeName), name)
+    }) {
+      case (((bronzeName, name, _), pid), Success(_)) =>
+        lineage.recordEdge("bronze", bronzeName, "silver", name, Some(pid), Some("cleansing"))
+        processes.endProcess(pid, "SUCCESS")
+      case ((_, pid), Failure(e)) => logFailure(pid, e)
+    }.collectFirst { case Failure(e) => e }.foreach(e => throw e)
   }
 
-  /** Gold KPIs from silver, with lineage. */
+  /** Gold KPIs from silver, with lineage. A failed build is logged, its
+    * process closed FAILED, and the error rethrown.
+    */
   def runGold(): Unit = {
     def silverTable(t: String) = spark.read.parquet(s"$warehouseDir/silver/$t")
     val pid = processes.startProcess("gold_build_customer_analytics", "", None, Some("gold"))
-    Gold
-      .customerAnalytics(silverTable("crm_customers"), silverTable("crm_sales"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$warehouseDir/gold/customer_analytics")
+    try {
+      Gold
+        .customerAnalytics(silverTable("crm_customers"), silverTable("crm_sales"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$warehouseDir/gold/customer_analytics")
+    } catch {
+      case NonFatal(e) => logFailure(pid, e); throw e
+    }
     lineage.recordEdge("silver", "crm_customers", "gold", "customer_analytics", Some(pid))
     lineage.recordEdge("silver", "crm_sales", "gold", "customer_analytics", Some(pid))
     processes.endProcess(pid, "SUCCESS")
   }
+
+  /** Logs `e` against process `pid` and closes the process FAILED. */
+  private def logFailure(pid: Long, e: Throwable): Unit = {
+    errors.logException(e, Some(pid))
+    processes.endProcess(pid, "FAILED", errorMessage = Some(e.getMessage))
+  }
+
+  /** Runs `run` on every step at once, one pool thread per step, and hands
+    * each outcome to `settle` on the calling thread in step order, as that
+    * step finishes; returns the outcomes in step order. The pool is created
+    * here, by the caller, so its threads inherit the caller's Spark local
+    * properties and active session; it is shut down and drained before this
+    * returns or throws, so no step outlives the call.
+    */
+  private def concurrently[S, A](steps: Seq[S])(run: S => A)(settle: (S, Try[A]) => Unit): Seq[Try[A]] =
+    if (steps.isEmpty) Nil
+    else {
+      val pool = Executors.newFixedThreadPool(steps.size)
+      try {
+        val pending = steps.map(s => pool.submit(new Callable[A] { def call(): A = run(s) }))
+        steps.zip(pending).map { case (s, f) =>
+          val out = Try(f.get()).recoverWith { case e: ExecutionException => Failure(e.getCause) }
+          settle(s, out)
+          out
+        }
+      } finally {
+        pool.shutdown()
+        pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      }
+    }
 }
 
 /** CLI mirroring the reference's `main.py` flags:
