@@ -1,8 +1,15 @@
 package graft
 
-/** Driver-run benchmark: every SparkEntry query timed at the target scale
-  * factor, one JSON line on stdout, on a [[graft.core.GraftSession]] local
-  * session (the host's cores, one shuffle partition per core).
+import org.json4s.{JArray, JDecimal, JField, JInt, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods.compact
+
+/** Driver-run benchmark: each selected SparkEntry query (every one when no
+  * name is given) timed at the target scale factor (`SPARK_GRAFT_SF_DIR`),
+  * a detail artifact (`SPARK_GRAFT_BENCH_OUT`) and one JSON line on stdout,
+  * on a [[graft.core.GraftSession]] local session (the host's cores, one
+  * shuffle partition per core).
+  *
+  * Usage: runMain graft.Bench [queryName ...]
   */
 object Bench {
   // the sf1 scaling pass: the K most expensive queries, a wall budget for
@@ -13,6 +20,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val names = args.toSeq
+    val selected = SparkEntry.select(names)
     val spark = graft.core.GraftSession.local()
     // Warm the JVM/codegen/scheduler and the parquet reader once so the
     // first timed query measures the query, not session startup. The string
@@ -97,47 +106,29 @@ object Bench {
     // reconstruct with an idle-machine debugging session
     val listener = new graft.perf.MetricsListener
     spark.sparkContext.addSparkListener(listener)
+    def executorMs(): (Long, Long, Long) = {
+      listener.settle(spark.sparkContext)
+      (listener.executorRunTimeMs.get, listener.executorCpuTimeMs.get, listener.jvmGcTimeMs.get)
+    }
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // failures of the EXTRA adjudication rep (two successful reps already
     // proved the query): kept under their own key so a flaky cause (an
     // OOM, a scratch race) stays auditable instead of being discarded
     val adjudicationErrors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // SPARK_GRAFT_BENCH_ONLY=q53_dedup_corpus,q65_... isolates queries for
-    // regression debugging in a fresh JVM; unset = full contract (driver use)
-    // 3-decimal rounding keeps the one-line JSON short enough that a
-    // tail-capped log capture does not truncate the head of the line
-    def fmt(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    val results = selected.zipWithIndex.map { case ((name, fn), qi) =>
+    val results = selected.zipWithIndex.map { case (name, qi) =>
       // untimed sentinel re-sample every ~25 queries (series in the
       // detail artifact; see sentinelSeries above)
       if (qi > 0 && qi % 25 == 0) sentinelSeries += ((qi, sentinelSample()))
       // a failed query must never masquerade as a fast success: it is
-      // recorded as -1 in `queries` AND carries its exception in `errors`
+      // recorded as -1 in `queries` AND carries its exception in `errors`.
+      // The step releases the session after each rep (untimed), which keeps
+      // reps independent — the LSH pipelines persist corpus-scale frames
+      // that otherwise accumulate and tax late queries with storage/GC
+      // pressure
       def rep(): Double = {
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).count(); true }
-          catch {
-            case e: Throwable =>
-              // keep the message printable ASCII: quotes/backslashes break
-              // the JSON string, raw control bytes break strict JSON parsers
-              errors.getOrElseUpdate(name, (e.getClass.getSimpleName + ": " +
-                Option(e.getMessage).getOrElse("").replaceAll("[^\\x20-\\x7e]|[\"\\\\]", " ")
-                  .replaceAll("\\s+", " ")).take(160))
-              false
-          }
-        val elapsed = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-        // each query pays for its own caching inside its timing; releasing
-        // the session BETWEEN reps (untimed) keeps reps independent — the
-        // LSH pipelines persist corpus-scale frames that otherwise
-        // accumulate and tax late queries with storage/GC pressure
-        graft.core.GraftSession.release(spark)
+        val (out, seconds) = SparkEntry.run(spark, name, sfDir)(_.count())
         System.gc()
-        elapsed
+        out.fold(e => { errors.getOrElseUpdate(name, e); -1.0 }, _ => seconds)
       }
       // JVM counters are cheap and always recorded into the detail artifact:
       // they separate driver-side costs the executor-task telemetry cannot
@@ -147,14 +138,9 @@ object Bench {
       // second rep with telemetry deltas; reporting min-of-2 makes the
       // per-query number robust to one-off host-load spikes (the r2->r3->r4
       // "outlier panic" cannot recur: a real regression shows in BOTH reps)
-      listener.settle()
-      val (run0, cpu0, gc0) =
-        (listener.executorRunTimeMs.get, listener.executorCpuTimeMs.get, listener.jvmGcTimeMs.get)
+      val (run0, cpu0, gc0) = executorMs()
       val r2 = if (r1 >= 0) rep() else -1.0
-      listener.settle()
-      val tele = (listener.executorRunTimeMs.get - run0,
-        listener.executorCpuTimeMs.get - cpu0,
-        listener.jvmGcTimeMs.get - gc0)
+      val (run1, cpu1, gc1) = executorMs()
       // a >2x spread between the two reps means one was load-disturbed —
       // take a THIRD (untelemetered) rep so the recorded min reflects the
       // query, not the host; recorded reps keep all walls (a failed third
@@ -177,7 +163,7 @@ object Bench {
       Console.err.println(f"bench: $name reps=${reps.map(fmt).mkString("/")} " +
         f"heap=${jvm1("heap_mb")}M meta=${jvm1("metaspace_mb")}M cc=${jvm1("codecache_mb")}M " +
         f"dJit=${jvmDelta("jit_ms")}ms dClasses=${jvmDelta("classes_total")}")
-      (name, wall, reps, tele, jvmDelta, jvm1)
+      QueryRecord(name, wall, reps, run1 - run0, cpu1 - cpu0, gc1 - gc0, jvmDelta, jvm1)
     }
     // closing sentinel sample: the last stretch of queries also gets a
     // load reference next to it in the artifact
@@ -191,16 +177,13 @@ object Bench {
     // denominator), top-K by measured wall, wall-budgeted: whatever the
     // budget drops is NAMED in sf1_skipped — no silent caps.
     // default-on for the full contract; "0" disables, "force" also runs
-    // it under a BENCH_ONLY subset (the local smoke path for this pass).
+    // it on a named subset (the local smoke path for this pass).
     // A failed query does not switch the pass off: it is named in `errors`
     // and drops out of the candidates, the rest still get their ratios.
     val sf1Env = sys.env.getOrElse("SPARK_GRAFT_BENCH_SF1", "1")
-    val sf1Enabled = sf1Env != "0" && (only.isEmpty || sf1Env == "force")
+    val sf1Enabled = sf1Env != "0" && (names.isEmpty || sf1Env == "force")
     var sf1GenSec = -1.0
-    val sf1Walls = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // per-entry (run_ms, cpu_ms, gc_ms, heap_mb-after) — the sf1 twin of
-    // the main pass's telemetry split
-    val sf1Tele = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long, Long, Long)]
+    val sf1 = scala.collection.mutable.ArrayBuffer.empty[Sf1Record]
     val sf1Skipped = scala.collection.mutable.ArrayBuffer.empty[String]
     val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_bench_sf1")
     if (sf1Enabled) {
@@ -233,14 +216,12 @@ object Bench {
         // q121 227.6 s) consume the whole budget and starve 26 of 30
         // measurements — cheapest-first bounds a blowup's damage to the
         // tail of the series instead of its head
-        val candidates = results
-          .collect { case (n, w, _, _, _, _) if w >= 0 => (n, w) }
-          .sortBy(-_._2)
+        val candidates = results.filter(_.wall >= 0)
+          .sortBy(-_.wall)
           .take(Sf1Top)
-          .sortBy(_._2)
-        val fnByName = SparkEntry.queries
+          .sortBy(_.wall)
         var spent = 0.0
-        candidates.foreach { case (name, _) =>
+        candidates.map(_.name).foreach { name =>
           if (spent > Sf1BudgetSec) sf1Skipped += name
           else {
             // watchdog: a super-linear plan at 10x (the exact regression
@@ -264,29 +245,22 @@ object Bench {
             // per-entry executor telemetry (run/cpu/gc), same split as the
             // main pass: r17's 16.9x q257 entry carried no gc_ms, so
             // pressure-vs-plan could not be adjudicated from the artifact
-            listener.settle()
-            val (run0, cpu0, gc0) =
-              (listener.executorRunTimeMs.get, listener.executorCpuTimeMs.get, listener.jvmGcTimeMs.get)
-            val t0 = System.nanoTime()
-            val ok =
-              try { fnByName(name)(spark, sf1Dir).count(); true }
-              catch { case _: Throwable => false }
+            val (run0, cpu0, gc0) = executorMs()
+            val (out, wall) =
+              try SparkEntry.run(spark, name, sf1Dir)(_.count())
               finally {
                 watchdog.cancel()
                 spark.sparkContext.clearJobGroup()
                 graft.queries.Pipeline.streamDeadlineNanos = Long.MaxValue
               }
-            val wall = (System.nanoTime() - t0) / 1e9
-            listener.settle()
-            graft.core.GraftSession.release(spark)
+            val (run1, cpu1, gc1) = executorMs()
             System.gc()
             val heapMb = graft.perf.JvmMetrics.snapshot()("heap_mb")
-            sf1Tele += name -> ((listener.executorRunTimeMs.get - run0,
-              listener.executorCpuTimeMs.get - cpu0,
-              listener.jvmGcTimeMs.get - gc0, heapMb))
-            sf1Walls += name -> (if (ok) wall else -1.0)
+            sf1 += Sf1Record(name, if (out.isRight) wall else -1.0,
+              run1 - run0, cpu1 - cpu0, gc1 - gc0, heapMb)
             spent += wall
-            Console.err.println(f"bench-sf1: $name ${fmt(wall)}s ok=$ok (spent ${fmt(spent)}s of $Sf1BudgetSec%.0f)")
+            Console.err.println(f"bench-sf1: $name ${fmt(wall)}s ok=${out.isRight} (spent ${fmt(spent)}s of $Sf1BudgetSec%.0f)")
+            out.swap.foreach(e => Console.err.println(s"bench-sf1: $name failed: $e"))
           }
         }
       } catch {
@@ -295,49 +269,8 @@ object Bench {
       }
     }
     spark.sparkContext.removeSparkListener(listener)
-    val qs = results.map { case (k, v, _, _, _, _) => s"\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    // reps = all raw walls (2, or 3 when the first two spread >2x — the
-    // third adjudicates a load spike in-artifact); run/cpu/gc are the
-    // SECOND rep's executor-task deltas; jvm_* are driver-JVM deltas
-    // across the reps (jit/class churn) + absolute occupancy after the
-    // query (heap/metaspace/codecache)
-    val teleJson = results.map { case (k, _, reps, (run, cpu, gc), jd, j1) =>
-      s"\"" + k + "\":{\"reps\":[" + reps.map(fmt).mkString(",") +
-        s"],\"run_ms\":$run,\"cpu_ms\":$cpu,\"gc_ms\":$gc" +
-        s",\"jit_ms\":${jd("jit_ms")},\"classes\":${jd("classes_total")}" +
-        s",\"heap_mb\":${j1("heap_mb")},\"meta_mb\":${j1("metaspace_mb")},\"cc_mb\":${j1("codecache_mb")}}"
-    }.mkString("{", ",", "}")
-    // the machine-load sentinel series: (query index, fixed-scan seconds)
-    // samples taken before the run, every ~25 queries, and after the last
-    // query — a reader separates host drift from plan regressions without
-    // leaving the artifact
-    val sentinelJson = sentinelSeries
-      .map { case (i, s) => s"[$i,${fmt(s)}]" }.mkString("[", ",", "]")
-    val errJson = errors.map { case (k, v) => s"\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
-    val adjErrJson = adjudicationErrors
-      .map { case (k, v) => s"\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
-    val total = results.collect { case (_, v, _, _, _, _) if v >= 0 => v }.sum
-    // per-query sf ratio: the 10x wall over the base min-of-2 wall — the
-    // in-artifact scaling exponent (10x data on the same cores; a
-    // ratio far past 10 means a super-linear plan term, see PLANS.md)
-    val baseWall = results.map { case (k, v, _, _, _, _) => k -> v }.toMap
-    val sf1QJson = sf1Walls.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val sf1RatioJson = sf1Walls.collect {
-      case (k, v) if v >= 0 && baseWall.getOrElse(k, -1.0) > 0 =>
-        s"\"" + k + "\":" + fmt(v / baseWall(k))
-    }.mkString("{", ",", "}")
-    val sf1SkippedJson = sf1Skipped.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val sf1TeleJson = sf1Tele.map { case (k, (run, cpu, gc, heap)) =>
-      s"\"" + k + s"\":{\"run_ms\":$run,\"cpu_ms\":$cpu,\"gc_ms\":$gc,\"heap_mb\":$heap}"
-    }.mkString("{", ",", "}")
-    val sf1Json =
-      s"""{"dir":"$sf1Dir","gen_sec":${fmt(sf1GenSec)},"top":$Sf1Top,"budget_sec":${fmt(Sf1BudgetSec)},"queries":$sf1QJson,"sf_ratio":$sf1RatioJson,"telemetry":$sf1TeleJson,"skipped_budget":$sf1SkippedJson}"""
-    val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"errors":$errJson,"adjudication_errors":$adjErrJson,"failed":${errors.size},"warmup_sec":${fmt(warmupSec)},"sentinels":$sentinelJson,"telemetry":$teleJson,"sf1":$sf1Json,"sf":"$sfDir"}"""
+    val report = Report(sfDir, warmupSec, sentinelSeries.toSeq, results, errors.toSeq,
+      adjudicationErrors.toSeq, sf1Dir, sf1GenSec, sf1.toSeq, sf1Skipped.toSeq)
     // The full artifact (long names, reps, telemetry) runs ~10 KB — far past
     // the driver's ~2000-char stdout tail capture, which truncated the head
     // of the line and left every BENCH_rN unparseable. It goes to the file;
@@ -345,25 +278,118 @@ object Bench {
     // prefix is unique per query) so the whole line fits inside the tail.
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      (compact(report.detail) + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: java.io.IOException => Console.err.println(s"bench: could not write $out: $e") }
-    val shortQs = results.map { case (k, v, _, _, _, _) =>
-      "\"" + k.takeWhile(_ != '_') + "\":" + fmt(v)
-    }.mkString("{", ",", "}")
     // stop Spark BEFORE printing: its shutdown logs (stderr) otherwise race
     // past the JSON in a merged-stream capture, and the driver parses the
     // FINAL line of the captured tail — the compact line must be the last
     // thing this process emits on stdout
     spark.sparkContext.setLogLevel("ERROR")
     spark.stop()
-    val sf1MaxRatio = sf1Walls.collect {
-      case (k, v) if v >= 0 && baseWall.getOrElse(k, -1.0) > 0 => v / baseWall(k)
-    }
-    val sf1Short =
-      if (sf1MaxRatio.isEmpty) ""
-      else s""","sf1_n":${sf1MaxRatio.size},"sf1_max_ratio":${fmt(sf1MaxRatio.max)}"""
-    println(
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$shortQs,"failed":${errors.size},"warmup_sec":${fmt(warmupSec)}$sf1Short,"sf":"$sfDir","detail":"$out"}""")
+    println(compact(report.summary(out)))
     Console.out.flush()
   }
+
+  /** One query's main-pass record: `wall` is the min of the successful reps
+    * (-1 when the query failed), `reps` every rep's wall; run/cpu/gc are the
+    * SECOND rep's executor-task deltas; `jvmDelta` holds driver-JVM deltas
+    * across the reps (jit/class churn), `jvmAfter` the occupancy after the
+    * query (heap/metaspace/codecache), both keyed as [[graft.perf.JvmMetrics]].
+    */
+  final case class QueryRecord(
+      name: String, wall: Double, reps: Seq[Double], runMs: Long, cpuMs: Long, gcMs: Long,
+      jvmDelta: Map[String, Long], jvmAfter: Map[String, Long])
+
+  /** One sf1-pass entry: the 10x wall (-1 when it failed), its executor
+    * run/cpu/gc deltas and the heap after it.
+    */
+  final case class Sf1Record(name: String, wall: Double, runMs: Long, cpuMs: Long, gcMs: Long, heapMb: Long)
+
+  /** Everything one run measured, and its two JSON encodings. */
+  final case class Report(
+      sfDir: String,
+      warmupSec: Double,
+      sentinels: Seq[(Int, Double)],
+      queries: Seq[QueryRecord],
+      errors: Seq[(String, String)],
+      adjudicationErrors: Seq[(String, String)],
+      sf1Dir: String,
+      sf1GenSec: Double,
+      sf1: Seq[Sf1Record],
+      sf1Skipped: Seq[String]) {
+
+    private def total = queries.map(_.wall).filter(_ >= 0).sum
+
+    // per-query sf ratio: the 10x wall over the base min-of-2 wall — the
+    // in-artifact scaling exponent (10x data on the same cores; a
+    // ratio far past 10 means a super-linear plan term, see PLANS.md)
+    private def sf1Ratios: Seq[(String, Double)] = {
+      val base = queries.map(q => q.name -> q.wall).toMap
+      sf1.collect { case r if r.wall >= 0 && base.getOrElse(r.name, -1.0) > 0 => r.name -> r.wall / base(r.name) }
+    }
+
+    /** The detail artifact. The machine-load `sentinels` are (query index,
+      * fixed-scan seconds) samples taken before the run, every ~25 queries,
+      * and after the last query — a reader separates host drift from plan
+      * regressions without leaving the artifact.
+      */
+    def detail: JObject = JObject(
+      "metric" -> JString("total"),
+      "value" -> num(total),
+      "unit" -> JString("sec"),
+      "queries" -> JObject(queries.map(q => q.name -> num(q.wall)): _*),
+      "errors" -> strings(errors),
+      "adjudication_errors" -> strings(adjudicationErrors),
+      "failed" -> JInt(errors.size),
+      "warmup_sec" -> num(warmupSec),
+      "sentinels" -> JArray(sentinels.map { case (i, s) => JArray(List(JInt(i), num(s))) }.toList),
+      "telemetry" -> JObject(queries.map(q => q.name -> JObject(
+        "reps" -> JArray(q.reps.map(num).toList),
+        "run_ms" -> JInt(q.runMs),
+        "cpu_ms" -> JInt(q.cpuMs),
+        "gc_ms" -> JInt(q.gcMs),
+        "jit_ms" -> JInt(q.jvmDelta("jit_ms")),
+        "classes" -> JInt(q.jvmDelta("classes_total")),
+        "heap_mb" -> JInt(q.jvmAfter("heap_mb")),
+        "meta_mb" -> JInt(q.jvmAfter("metaspace_mb")),
+        "cc_mb" -> JInt(q.jvmAfter("codecache_mb")))): _*),
+      "sf1" -> JObject(
+        "dir" -> JString(sf1Dir),
+        "gen_sec" -> num(sf1GenSec),
+        "top" -> JInt(Sf1Top),
+        "budget_sec" -> num(Sf1BudgetSec),
+        "queries" -> JObject(sf1.map(r => r.name -> num(r.wall)): _*),
+        "sf_ratio" -> JObject(sf1Ratios.map { case (k, v) => k -> num(v) }: _*),
+        "telemetry" -> JObject(sf1.map(r => r.name -> JObject(
+          "run_ms" -> JInt(r.runMs),
+          "cpu_ms" -> JInt(r.cpuMs),
+          "gc_ms" -> JInt(r.gcMs),
+          "heap_mb" -> JInt(r.heapMb))): _*),
+        "skipped_budget" -> JArray(sf1Skipped.map(JString(_)).toList)),
+      "sf" -> JString(sfDir))
+
+    /** The one stdout line: queries keyed by their unique `qNN` prefix, the
+      * sf1 count and largest ratio when the pass measured any, and the path
+      * of the detail artifact.
+      */
+    def summary(detailPath: String): JObject = {
+      val ratios = sf1Ratios.map(_._2)
+      JObject(List[JField](
+        "metric" -> JString("total"),
+        "value" -> num(total),
+        "unit" -> JString("sec"),
+        "queries" -> JObject(queries.map(q => q.name.takeWhile(_ != '_') -> num(q.wall)): _*),
+        "failed" -> JInt(errors.size),
+        "warmup_sec" -> num(warmupSec)) ++
+        (if (ratios.isEmpty) Nil
+         else List[JField]("sf1_n" -> JInt(ratios.size), "sf1_max_ratio" -> num(ratios.max))) ++
+        List[JField]("sf" -> JString(sfDir), "detail" -> JString(detailPath)))
+    }
+  }
+
+  // 3-decimal rounding keeps the one-line JSON short enough that a
+  // tail-capped log capture does not truncate the head of the line
+  private def fmt(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+  private def num(v: Double): JValue = JDecimal(BigDecimal(fmt(v)))
+  private def strings(kvs: Seq[(String, String)]): JObject = JObject(kvs.map { case (k, v) => k -> JString(v) }: _*)
 }

@@ -2,18 +2,20 @@ package graft
 
 /** Plan inspector: prints the formatted physical plan for the named queries
   * (or all) at the given sf dir. Used to audit pushdown / pruning /
-  * broadcast / codegen coverage per round.
+  * broadcast / codegen coverage per round. A query that fails to build or
+  * plan is named on stderr and the run goes on to the next.
   *
   * Usage: runMain graft.Explain [sfDir] [queryName ...]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val selected = SparkEntry.select(args.drop(1).toSeq)
     val spark = core.GraftSession.local()
-    names.foreach { n =>
+    selected.foreach { n =>
       println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      SparkEntry.run(spark, n, sfDir)(_.explain("formatted"))
+        ._1.swap.foreach(e => System.err.println(s"[explain] $n failed: $e"))
     }
     spark.stop()
   }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.core.GraftSession
 import graft.queries.{Medallion, Pipeline, Relational}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -16,6 +17,38 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.revenueBySegment(spark, "/root/testdata/sf0.001")
+
+  /** The queries a driver main runs: the whole contract sorted by name when
+    * `names` is empty, else exactly `names` in the order given. A name not in
+    * the contract fails the selection, naming every unknown one, so a
+    * misspelt list never runs an empty or partial set.
+    */
+  def select(names: Seq[String]): Seq[String] = {
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"not in the SparkEntry contract: ${unknown.mkString(", ")}")
+    if (names.isEmpty) queries.keys.toSeq.sorted else names.distinct
+  }
+
+  /** The one per-query step of Bench, Verify and Explain: builds `name`'s
+    * frame over `sfDir`, applies `action` to it, then releases the session.
+    * Returns the action's result, or the failure as `SimpleClassName:
+    * message` cut at 160 characters, with the wall seconds of build and
+    * action (the release is not timed).
+    */
+  def run[A](spark: SparkSession, name: String, sfDir: String)(
+      action: DataFrame => A): (Either[String, A], Double) = {
+    val build = queries(name)
+    val t0 = System.nanoTime()
+    val out =
+      try Right(action(build(spark, sfDir)))
+      catch {
+        case e: Throwable =>
+          Left((e.getClass.getSimpleName + ": " + Option(e.getMessage).getOrElse("")).take(160))
+      }
+    val seconds = (System.nanoTime() - t0) / 1e9
+    GraftSession.release(spark)
+    (out, seconds)
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q01_pricing_summary" -> (Relational.pricingSummary _),

@@ -1,44 +1,29 @@
 package graft
+
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods.compact
+
+/** Driver-run correctness dump: each selected SparkEntry query's result →
+  * parquet under `outDir/<name>`, plus `oracle_sql.json`, for the driver's
+  * DuckDB compare. A failing query is named on stderr and leaves no output
+  * directory; the others still run.
+  *
+  * Usage: runMain graft.Verify sfDir outDir [queryName ...]
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val Seq(sfDir, outDir, names @ _*) = args.toSeq
+    val selected = SparkEntry.select(names)
     val spark = graft.core.GraftSession.local()
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_VERIFY_ONLY=q90_...,q94_... restricts the dump for local
-    // iteration; unset = full contract (driver use)
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // LSH/curation queries persist corpus-scale frames and stream
-      // queries leave RAM-backed scratch: release between queries so the
-      // dump never accumulates either
-      graft.core.GraftSession.release(spark)
+    selected.foreach { name =>
+      SparkEntry.run(spark, name, sfDir)(_.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+        ._1.swap.foreach(e => System.err.println(s"[verify] $name failed: $e"))
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val oracle = JObject(SparkEntry.oracleSql.toList.map { case (k, v) => k -> JString(v) })
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), compact(oracle))
     spark.stop()
   }
 }

@@ -52,7 +52,10 @@ final class SetupOrchestrator(
 
   /** Ordered setup with stop-on-first-failure and rollback on failure.
     * `samples` adds the reference's three sample medallion tables
-    * (setup_orchestrator.py:464-523); `forceRecreate` drops everything first.
+    * (setup_orchestrator.py:464-523); `forceRecreate` drops everything first:
+    * the catalog databases and the pipeline's data under the warehouse
+    * (`gold`, `silver`, `bronze`, `logs`, in that order), so a rerun starts
+    * from empty tables rather than appending to the last run's bronze.
     */
   def runCompleteSetup(
       rollbackOnFailure: Boolean = true,
@@ -85,7 +88,8 @@ final class SetupOrchestrator(
           "graft_gold.customer_analytics_sample")
       }))
     val recreateStep: Seq[(String, () => Unit)] =
-      if (forceRecreate) Seq("drop_existing" -> (() => catalog.dropDatabases())) else Nil
+      if (forceRecreate) Seq("drop_existing" -> (() => { catalog.dropDatabases(); deleteLayerData() }))
+      else Nil
     val steps: Seq[(String, () => Unit)] = recreateStep ++ Seq(
       "databases" -> (() => catalog.createDatabases()),
       "logging" -> (() => {
@@ -111,7 +115,19 @@ final class SetupOrchestrator(
     results.toSeq
   }
 
+  /** Drops the catalog databases after a failed setup. The layer data stays:
+    * the setup did not create it.
+    */
   def rollback(): Unit = catalog.dropDatabases()
+
+  /** Deletes the layer directories the pipeline writes (`<wh>/<layer>`,
+    * gold first), through the Hadoop FileSystem so HDFS/S3 behave as the
+    * local filesystem does. A directory that does not exist is skipped.
+    */
+  private def deleteLayerData(): Unit = catalog.databases.reverse.foreach { layer =>
+    val p = new org.apache.hadoop.fs.Path(s"$warehouseDir/$layer")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+  }
 
   /** Bronze ingestion with full observability (the reference's
     * load_csv_to_bronze flow, bronze.py:389-591): process log → load →

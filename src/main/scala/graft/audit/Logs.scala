@@ -139,31 +139,34 @@ final class LogStore(val spark: SparkSession, dir: String) {
     t -> StructType(s.add("_event_seq", LongType).map(_.copy(nullable = true)))
   }.toMap
 
-  // One counter PER TABLE, seeded lazily from that table's persisted max so
-  // a new LogStore over an existing event log keeps each table's sequence
-  // monotonic: without this, an update appended after a restart would sort
-  // BELOW older events and the latest-wins current() view would silently
-  // return stale state. A single shared counter is not enough — it would
-  // seed from whichever table is appended first and could still hand other
-  // tables values below their own persisted max. computeIfAbsent also makes
-  // the seed read run once per table, not once per append.
-  private val seqs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
+  // One counter per (table, column), seeded lazily from that column's
+  // persisted max, then counting in memory: the id of each log table and
+  // every table's `_event_seq` alike. Seeding from the persisted max keeps a
+  // new LogStore over an existing event log monotonic: without it, an update
+  // appended after a restart would sort BELOW older events and the
+  // latest-wins current() view would silently return stale state. Per
+  // table, because one shared counter would seed from whichever table is
+  // appended first and could hand other tables values below their own max.
+  // Counting in memory means an id or an append never launches a max-scan
+  // job (its cost grows with the log; the counter's does not).
+  private val counters =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), java.util.concurrent.atomic.AtomicLong]()
 
-  private def seqFor(table: String): java.util.concurrent.atomic.AtomicLong = {
+  private def counter(table: String, column: String): java.util.concurrent.atomic.AtomicLong = {
     // the seed read is a Spark job — run it OUTSIDE computeIfAbsent so the
     // map's bin lock is never held across a distributed action (a concurrent
     // duplicate seed read is harmless: both compute the same max, one wins)
-    val existing = seqs.get(table)
+    val key = (table, column)
+    val existing = counters.get(key)
     if (existing != null) existing
     else {
       val start =
         if (!exists(table)) 0L
         else {
-          val r = events(table).agg(max(col("_event_seq"))).head()
+          val r = events(table).agg(max(col(column))).head()
           if (r.isNullAt(0)) 0L else r.getLong(0)
         }
-      seqs.computeIfAbsent(table, _ => new java.util.concurrent.atomic.AtomicLong(start))
+      counters.computeIfAbsent(key, _ => new java.util.concurrent.atomic.AtomicLong(start))
     }
   }
 
@@ -190,7 +193,7 @@ final class LogStore(val spark: SparkSession, dir: String) {
     */
   def appendEvents[T <: Product: Encoder](table: String, rows: Seq[T]): Unit = {
     val (factory, ctx) = writerFor(table)
-    val seq = new GenericInternalRow(Array[Any](seqFor(table).incrementAndGet()))
+    val seq = new GenericInternalRow(Array[Any](counter(table, "_event_seq").incrementAndGet()))
     // the serializer reuses its output row: one per call, never shared
     val toRow = encoderFor[T].createSerializer()
     val dir = new Path(path(table))
@@ -255,31 +258,7 @@ final class LogStore(val spark: SparkSession, dir: String) {
     hit.get
   }
 
-  // id allocation mirrors the _event_seq mechanism above: seed once per
-  // (table, idCol) from the persisted max, then count in memory — id
-  // allocation must not launch a max-scan Spark job per call (5 call sites,
-  // one per log table; the scan cost grows with the log, the counter doesn't)
-  private val ids =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
-  def nextId(table: String, idCol: String): Long = {
-    val key = table + ":" + idCol
-    val existing = ids.get(key)
-    val ctr =
-      if (existing != null) existing
-      else {
-        // seed scan runs OUTSIDE computeIfAbsent (same reasoning as seqFor):
-        // never hold the map's bin lock across a distributed action
-        val start =
-          if (!exists(table)) 0L
-          else {
-            val r = events(table).agg(max(col(idCol))).head()
-            if (r.isNullAt(0)) 0L else r.getLong(0)
-          }
-        ids.computeIfAbsent(key, _ => new java.util.concurrent.atomic.AtomicLong(start))
-      }
-    ctr.incrementAndGet()
-  }
+  def nextId(table: String, idCol: String): Long = counter(table, idCol).incrementAndGet()
 }
 
 /** Process lifecycle logging (reference `logs/audit_logger.py:188-399`). */

@@ -42,24 +42,45 @@ object Mutations {
       keys: Seq[String],
       updatedBy: Option[String] = None,
       updateWhere: Option[Column] = None): DataFrame = {
-    // side-existence is decided by a non-null tag column, NOT key nullability:
-    // a source row with a NULL first key is still a real (unmatched) row and
-    // must insert with its own values, not degrade into an all-target-null row
-    Seq("_t_exists", "_s_exists").foreach { r =>
+    val guard = updateWhere.getOrElse(lit(true))
+    // unmatched source rows always insert; matched rows update only per guard
+    val (joined, cols) = fullOuterMerge("upsert", Nil, target, source, keys, updatedBy)(
+      takeSource = (SrcExists && !TgtExists) || (SrcExists && TgtExists && guard),
+      isUpdate = SrcExists && TgtExists && guard)
+    joined.select(cols: _*) // tag columns are not selected — they vanish here
+  }
+
+  // side-existence is decided by a non-null tag column, NOT key nullability:
+  // a source row with a NULL first key is still a real (unmatched) row and
+  // must insert with its own values, not degrade into an all-target-null row
+  private val SrcExists = col("s._s_exists").isNotNull
+  private val TgtExists = col("t._t_exists").isNotNull
+
+  /** The shared core of [[upsert]] and [[merge]]: checks that neither side
+    * has a `reserved` or tag column (`op` names the caller in the error),
+    * tags each side with a non-null existence column, full-outer joins them
+    * on `keys` as `t` and `s`, and returns the join with the output columns:
+    * each key coalesced source-first, and each other target column the
+    * source's value where `takeSource` holds (when the source has the
+    * column) else the target's, with `updated_at` (and `updated_by`, when
+    * given) refreshed where `isUpdate` holds.
+    */
+  private def fullOuterMerge(
+      op: String,
+      reserved: Seq[String],
+      target: DataFrame,
+      source: DataFrame,
+      keys: Seq[String],
+      updatedBy: Option[String])(takeSource: Column, isUpdate: Column): (DataFrame, Seq[Column]) = {
+    (reserved ++ Seq("_t_exists", "_s_exists")).foreach { r =>
       require(!target.columns.contains(r) && !source.columns.contains(r),
-        s"upsert reserves column name $r")
+        s"$op reserves column name $r")
     }
     val t = target.withColumn("_t_exists", lit(true)).alias("t")
     val s = source.withColumn("_s_exists", lit(true)).alias("s")
-    val dataCols = target.columns.filterNot(keys.contains)
-    val srcExists = col("s._s_exists").isNotNull
-    val tgtExists = col("t._t_exists").isNotNull
-    val guard = updateWhere.getOrElse(lit(true))
-    // unmatched source rows always insert; matched rows update only per guard
-    val takeSource = (srcExists && !tgtExists) || (srcExists && tgtExists && guard)
-    val isUpdate = srcExists && tgtExists && guard
+    val joined = t.join(s, keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _), "full_outer")
     val keyCols = keys.map(k => coalesce(col(s"s.$k"), col(s"t.$k")).as(k))
-    val valCols = dataCols.toSeq.map { c =>
+    val valCols = target.columns.filterNot(keys.contains).toSeq.map { c =>
       val base =
         if (source.columns.contains(c)) when(takeSource, col(s"s.$c")).otherwise(col(s"t.$c"))
         else col(s"t.$c")
@@ -70,8 +91,7 @@ object Mutations {
       }
       refreshed.as(c)
     }
-    t.join(s, keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _), "full_outer")
-      .select(keyCols ++ valCols: _*) // tag columns are not selected — they vanish here
+    (joined, keyCols ++ valCols)
   }
 
   /** Merge action classification (reference `sql/dml.py:283-293`): tag each
@@ -110,40 +130,18 @@ object Mutations {
     // same reserved-name discipline as softDelete/batchUpdate: a real
     // _merge_action (or tag) column would be silently overwritten and corrupt
     // both the classification and the output
-    Seq("_merge_action", "_t_exists", "_s_exists").foreach { r =>
-      require(!target.columns.contains(r) && !source.columns.contains(r),
-        s"merge reserves column name $r")
-    }
-    // existence via non-null tags, not key nullability — see upsert
-    val t = target.withColumn("_t_exists", lit(true)).alias("t")
-    val s = source.withColumn("_s_exists", lit(true)).alias("s")
-    val joinCond = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
-    val srcExists = col("s._s_exists").isNotNull
-    val tgtExists = col("t._t_exists").isNotNull
+    val (joined, cols) = fullOuterMerge("merge", Seq("_merge_action"), target, source, keys, updatedBy)(
+      takeSource = col("_merge_action").isin("INSERT", "UPDATE"),
+      isUpdate = col("_merge_action") === "UPDATE")
     val del = deleteWhere.getOrElse(lit(false))
-    val action = when(srcExists && tgtExists && del, "DELETE")
-      .when(srcExists && tgtExists, "UPDATE")
-      .when(srcExists, "INSERT")
+    val action = when(SrcExists && TgtExists && del, "DELETE")
+      .when(SrcExists && TgtExists, "UPDATE")
+      .when(SrcExists, "INSERT")
       .otherwise("KEEP") // target-only rows pass through unchanged, uncounted
-    val tagged = t.join(s, joinCond, "full_outer").withColumn("_merge_action", action)
-    val takeSource = col("_merge_action").isin("INSERT", "UPDATE")
-    val isUpdate = col("_merge_action") === "UPDATE"
-    val dataCols = target.columns.filterNot(keys.contains)
-    val keyCols = keys.map(k => coalesce(col(s"s.$k"), col(s"t.$k")).as(k))
-    val valCols = dataCols.toSeq.map { c =>
-      val base =
-        if (source.columns.contains(c)) when(takeSource, col(s"s.$c")).otherwise(col(s"t.$c"))
-        else col(s"t.$c")
-      val refreshed = c match {
-        case "updated_at" => when(isUpdate, current_timestamp()).otherwise(base)
-        case "updated_by" if updatedBy.isDefined => when(isUpdate, lit(updatedBy.get)).otherwise(base)
-        case _ => base
-      }
-      refreshed.as(c)
-    }
+    val tagged = joined.withColumn("_merge_action", action)
     val merged = tagged
       .where(col("_merge_action") =!= "DELETE")
-      .select(keyCols ++ valCols: _*)
+      .select(cols: _*)
     val counts = tagged
       .where(col("_merge_action") =!= "KEEP")
       .groupBy(col("_merge_action").as("merge_action"))

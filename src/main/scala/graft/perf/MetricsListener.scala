@@ -2,6 +2,8 @@ package graft.perf
 
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.SparkContext
+import org.apache.spark.graftbus.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerStageCompleted, SparkListenerTaskEnd}
 
 /** Spark-listener metrics collection — the engine-native replacement for the
@@ -50,22 +52,12 @@ final class MetricsListener extends SparkListener {
     jobsCompleted.incrementAndGet()
   }
 
-  /** Wait for the async listener bus to go quiet before reading counters:
-    * poll until two consecutive reads (100 ms apart) are identical, capped
-    * at 5 s. The proper bus-drain API is `private[spark]`; without this, the
-    * last wave of task-end events lands in the NEXT measurement's delta.
-    * The ONE settle implementation — every measurement site must use it.
+  /** Blocks until the listener bus has delivered every event posted so far,
+    * so counters read next include the last wave of task-end events of the
+    * work just done, not the next measurement's delta. The ONE settle
+    * implementation — every measurement site must use it.
     */
-  def settle(): Unit = {
-    var prev = -1L
-    var settled = 0
-    var waited = 0
-    while (settled < 2 && waited < 5000) {
-      Thread.sleep(100); waited += 100
-      val cur = tasksCompleted.get + jobsCompleted.get + executorRunTimeMs.get
-      if (cur == prev) settled += 1 else { settled = 0; prev = cur }
-    }
-  }
+  def settle(sc: SparkContext): Unit = ListenerDrain(sc)
 
   /** (metric name, value, unit), ready for PerformanceMonitor.recordAll. */
   def snapshot(): Seq[(String, Double, String)] = Seq(
@@ -94,7 +86,7 @@ object MetricsListener {
     spark.sparkContext.addSparkListener(listener)
     try f
     finally {
-      listener.settle()
+      listener.settle(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
       monitor.recordAll(listener.snapshot(), processLogId)
     }

@@ -15,7 +15,7 @@ trait SparkSpec extends AnyFunSuite {
     val jobs = new graft.perf.MetricsListener
     spark.sparkContext.addSparkListener(jobs)
     val out = try f finally {
-      jobs.settle()
+      jobs.settle(spark.sparkContext)
       spark.sparkContext.removeSparkListener(jobs)
     }
     (out, jobs.jobsCompleted.get)

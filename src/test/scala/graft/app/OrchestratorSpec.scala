@@ -227,6 +227,19 @@ class OrchestratorSpec extends SparkSpec {
     assert(orch.errors.unresolvedErrors().count() == 1)
   }
 
+  test("force-recreate deletes the pipeline's data: a rerun does not double bronze") {
+    val dir = tempDir("graft-wh-recreate")
+    val orch = new SetupOrchestrator(spark, dir)
+    val csvs = sourceCsvs()
+    assert(orch.runCompleteSetup().forall(_.ok))
+    orch.runBronze(csvs)
+    val setup = orch.runCompleteSetup(forceRecreate = true)
+    assert(setup.forall(_.ok), setup.mkString("; "))
+    assert(orch.runBronze(csvs).forall(_.isSuccess))
+    assert(spark.read.parquet(s"$dir/bronze/crm_customers_raw").count() == 4)
+    assert(orch.store.current("process_log", "log_id").count() == 6)
+  }
+
   test("bronze failure is tolerated per-source and logged") {
     val dir = java.nio.file.Files.createTempDirectory("graft-wh2").toString
     val orch = new SetupOrchestrator(spark, dir)
