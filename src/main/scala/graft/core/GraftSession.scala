@@ -64,12 +64,20 @@ object GraftSession {
     * every persistent RDD (`localCheckpoint` blocks live outside the SQL
     * cache manager, and lazy GC-driven cleanup let leaked blocks evict
     * later queries' live caches: q53 measured 3.1 s fresh vs 13.9 s
-    * mid-suite), and the query's stream scratch trees, which sit on a
-    * RAM-backed base. Only safe once the query's result is materialized.
+    * mid-suite), the query's stream scratch trees, which sit on a
+    * RAM-backed base, and its temporary views, local and global, so the
+    * next query and a catalog listing do not see them. Only safe once the
+    * query's result is materialized.
+    *
+    * The [[Tables]] schema memo is kept: it holds the schemas of immutable
+    * parquet inputs, not data, so Bench's later reps and Verify's later
+    * queries reuse it, and a rewritten input misses it on its own.
     */
   def release(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     graft.queries.Pipeline.reapScratch()
+    spark.sessionState.catalog.clearTempTables()
+    spark.sharedState.globalTempViewManager.clear()
   }
 }

@@ -47,13 +47,20 @@ class GraftSessionSpec extends SparkSpec {
     val scratch = Paths.get(graft.queries.Pipeline.scratchDir("graft_release_spec_"))
     Files.writeString(scratch.resolve("commit"), "0")
     assert(spark.catalog.isCached("graft_release_t"))
+    // q237 registers its own view; a global temp view lives in global_temp
+    graft.SparkEntry.queries("q237_correlated_subquery")(spark, Sf0001).count()
+    spark.range(0, 10).createOrReplaceGlobalTempView("graft_release_g")
+    assert(spark.catalog.listTables().collect().exists(_.name == "q237_orders"))
+    assert(spark.catalog.tableExists("global_temp", "graft_release_g"))
 
     GraftSession.release(spark)
 
     assert(cached.storageLevel == StorageLevel.NONE)
-    assert(!spark.catalog.isCached("graft_release_t"))
+    assert(spark.sharedState.cacheManager.isEmpty)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
     assert(!Files.exists(scratch))
-    spark.catalog.dropTempView("graft_release_t")
+    val temporary = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name)
+    assert(temporary.isEmpty, temporary.mkString(", "))
+    assert(!spark.catalog.tableExists("global_temp", "graft_release_g"))
   }
 }

@@ -59,6 +59,29 @@ class PlanAuditSpec extends SparkSpec {
     planned.collect { case (name, Success(p)) => name -> p }
   }
 
+  test("a build that reuses remembered table schemas plans exactly as a fresh session's build") {
+    // the perfbench warehouse_sql queries, two of the medallion workload's,
+    // and q27, which reads one table twice
+    val names = Seq(
+      "q02_filter_sort_limit", "q04_left_join_customer_orders", "q05_exists_open_orders",
+      "q07_having_supplier_volume", "q17_dedup_latest", "q20_percentiles",
+      "q237_correlated_subquery", "q22_incremental_load", "q49_batch_update",
+      "q27_graph_traversal")
+    // expression and exchange ids differ from build to build: compare the shapes
+    def normalized(p: Any): String =
+      p.toString.replaceAll("#\\d+", "#N").replaceAll("plan_id=\\d+", "plan_id=N")
+    def plans(s: org.apache.spark.sql.SparkSession, name: String): (String, String) = {
+      val qe = SparkEntry.queries(name)(s, Sf0001).queryExecution
+      (normalized(qe.optimizedPlan), normalized(qe.executedPlan))
+    }
+    val differing = names.filter { name =>
+      val s = spark.newSession()
+      val fresh = plans(s, name)
+      fresh != plans(s, name)
+    }
+    assert(differing.isEmpty, s"memo-hit builds plan differently: ${differing.mkString(", ")}")
+  }
+
   test("no query plans a cartesian product or an unintended nested-loop join") {
     // q38 is the ONLY allowed nested-loop join in the contract: the exact
     // embedding-near-dup oracle twin, a deliberate pairwise pass over a

@@ -7,6 +7,8 @@ Reads each <verify_out_dir>/<query> parquet (Spark result), runs the matching
 oracle SQL from oracle_sql.json in DuckDB over the sf_dir parquet tables, and
 compares STRICTLY (driver-faithful, round-2 hardening):
 
+  - every query named in oracle_sql.json (filtered by the optional query
+    list) is checked: one with no Spark output (it threw in Verify) fails;
   - column names (sorted) must match;
   - row counts must match;
   - values are compared via fetchall() tuples, preserving decimal.Decimal —
@@ -76,8 +78,13 @@ def main():
         elif Path(p).exists():  # driver-generated single file
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     n_pass = n_fail = n_skip = 0
-    for name in sorted(d.name for d in out_dir.iterdir() if d.is_dir()):
+    dumped = {d.name for d in out_dir.iterdir() if d.is_dir()}
+    for name in sorted(set(oracle) | dumped):
         if only and name not in only:
+            continue
+        if name not in dumped:
+            print(f"FAIL {name}: no Spark output")
+            n_fail += 1
             continue
         with duckdb.connect() as scon:
             scur = scon.execute(f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')")
