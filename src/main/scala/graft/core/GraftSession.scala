@@ -34,7 +34,13 @@ object GraftSession {
     *    every file or dir create on the stock local FS forks a `chmod`
     *    process, stack-sampled at up to half the wall of the streaming
     *    certification queries. No plan or result changes; a cluster FS
-    *    (HDFS/S3) never takes this path.
+    *    (HDFS/S3) never takes this path;
+    *  - the engine's native SQL functions as a session extension (see
+    *    [[graft.functions.NativeFunctions]]): every session, and every
+    *    `newSession()` or streaming clone of it, resolves them from the
+    *    moment it is built, through `call_function` and SQL text alike, so
+    *    no helper registers anything at use and no frame depends on which
+    *    session is the thread's active one.
     */
   def settings(cores: Int, shufflePartitions: Int): Map[String, String] = Map(
     "spark.master" -> s"local[$cores]",
@@ -46,7 +52,8 @@ object GraftSession {
     "spark.sql.codegen.cache.maxEntries" -> "10000",
     "spark.file.transferTo" -> "false",
     "spark.hadoop.fs.file.impl" -> classOf[NoChmodLocalFileSystem].getName,
-    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NoChmodLocalFs].getName)
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NoChmodLocalFs].getName,
+    "spark.sql.extensions" -> classOf[graft.functions.NativeFunctions].getName)
 
   /** A local session on `cores` cores, one shuffle partition per core. */
   def local(cores: Int = hostCores): SparkSession = local(cores, cores)

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -223,34 +223,16 @@ case class BloomMightContain(left: Expression, right: Expression)
 
 object BloomFilterAgg {
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_build_long",
-      exprs => BloomBuildLong(
-        exprs.head,
-        exprs(1).eval(null).toString.toInt,
-        exprs(2).eval(null).toString.toInt),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      exprs => BloomMightContain(exprs.head, exprs(1)),
-      "built-in")
-  }
-
   /** Serialized Bloom filter (BINARY) over the group's Long keys. */
-  def bloomBuild(spark: SparkSession, key: Column, numBits: Int, numHashes: Int): Column = {
-    register(spark)
+  def bloomBuild(key: Column, numBits: Int, numHashes: Int): Column =
     org.apache.spark.sql.functions.call_function(
       "bloom_build_long", key,
       org.apache.spark.sql.functions.lit(numBits),
       org.apache.spark.sql.functions.lit(numHashes))
-  }
 
   /** Membership probe of `key` against a BUILT filter's bytes. */
-  def bloomProbe(spark: SparkSession, bloom: Array[Byte], key: Column): Column = {
-    register(spark)
+  def bloomProbe(bloom: Array[Byte], key: Column): Column =
     org.apache.spark.sql.functions.call_function(
       "bloom_might_contain",
       org.apache.spark.sql.functions.lit(bloom), key)
-  }
 }

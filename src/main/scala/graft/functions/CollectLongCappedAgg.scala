@@ -4,7 +4,7 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -211,53 +211,19 @@ case class CollectStringCapped(
 }
 
 object CollectStringCapped {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "collect_string_capped",
-      exprs => CollectStringCapped(
-        exprs.head,
-        exprs(1).eval(null) match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => other.toString.toInt
-        }),
-      "built-in")
-
   /** `struct(total, ids)` of the group: true count + at most `maxKeep`
     * collected values of String-typed `c`.
     */
-  def collectCapped(spark: SparkSession, c: Column, maxKeep: Int): Column = {
-    register(spark)
+  def collectCapped(c: Column, maxKeep: Int): Column =
     org.apache.spark.sql.functions.call_function(
       "collect_string_capped", c, org.apache.spark.sql.functions.lit(maxKeep))
-  }
 }
 
 object CollectLongCapped {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "collect_long_capped",
-      exprs => CollectLongCapped(
-        exprs.head,
-        exprs(1).eval(null) match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => other.toString.toInt
-        }),
-      "built-in")
-
   /** `struct(total, ids)` of the group: true count + at most `maxKeep`
-    * collected values of Long-typed `c`. Registers the function on the
-    * session that owns the calling DataFrame — pass it explicitly; the
-    * no-session overload falls back to `SparkSession.active`, which is only
-    * safe in single-session use.
+    * collected values of Long-typed `c`.
     */
-  def collectCapped(spark: SparkSession, c: Column, maxKeep: Int): Column = {
-    register(spark)
+  def collectCapped(c: Column, maxKeep: Int): Column =
     org.apache.spark.sql.functions.call_function(
       "collect_long_capped", c, org.apache.spark.sql.functions.lit(maxKeep))
-  }
-
-  def collectCapped(c: Column, maxKeep: Int): Column =
-    collectCapped(SparkSession.active, c, maxKeep)
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -99,18 +98,10 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
-  /** SQL registration: `SELECT cosine_similarity(a, b)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_similarity",
-      exprs => CosineSimilarity(exprs(0), exprs(1)),
-      "built-in")
-
-  /** Column-level entry point (Spark 4 keeps Expression→Column construction
-    * internal, so this resolves through the function registry).
+  /** Column-level entry point: a call of the session's `cosine_similarity`
+    * ([[NativeFunctions]]), because Spark 4 keeps Expression→Column
+    * construction internal.
     */
-  def cosineFast(a: Column, b: Column): Column = {
-    register(SparkSession.active)
+  def cosineFast(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("cosine_similarity", a, b)
-  }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types._
 
@@ -48,19 +47,9 @@ case class ShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
 }
 
 object ShinglesExpr {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_slices",
-      exprs => ShinglesExpr(
-        exprs.head,
-        exprs(1).eval(null).asInstanceOf[Int]),
-      "built-in")
-
-  def shinglesFast(normalizedText: Column, n: Int): Column = {
-    register(SparkSession.active)
+  def shinglesFast(normalizedText: Column, n: Int): Column =
     org.apache.spark.sql.functions.call_function(
       "shingle_slices", normalizedText, org.apache.spark.sql.functions.lit(n))
-  }
 }
 
 /** Native text normalization ([[SigKernels.normalizeText]]): one fused
@@ -100,16 +89,8 @@ case class NormalizeTextExpr(child: Expression) extends UnaryExpression {
 }
 
 object NormalizeTextExpr {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "normalize_text",
-      exprs => NormalizeTextExpr(exprs.head),
-      "built-in")
-
-  def normalizeFast(text: Column): Column = {
-    register(SparkSession.active)
+  def normalizeFast(text: Column): Column =
     org.apache.spark.sql.functions.call_function("normalize_text", text)
-  }
 }
 
 /** Fused gram-hash for the span family: per input row, the [[Sha60]] hash
@@ -152,17 +133,7 @@ case class SpanGramHashesExpr(child: Expression, l: Int) extends UnaryExpression
 }
 
 object SpanGramHashesExpr {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "span_gram_hashes",
-      exprs => SpanGramHashesExpr(
-        exprs.head,
-        exprs(1).eval(null).asInstanceOf[Int]),
-      "built-in")
-
-  def spanGramHashesFast(normalizedText: Column, l: Int): Column = {
-    register(SparkSession.active)
+  def spanGramHashesFast(normalizedText: Column, l: Int): Column =
     org.apache.spark.sql.functions.call_function(
       "span_gram_hashes", normalizedText, org.apache.spark.sql.functions.lit(l))
-  }
 }

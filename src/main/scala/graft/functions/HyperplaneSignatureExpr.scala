@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -53,16 +52,7 @@ case class HyperplaneSignatureExpr(child: Expression, nPlanes: Int)
 }
 
 object HyperplaneSignatureExpr {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hyperplane_signature",
-      exprs => HyperplaneSignatureExpr(
-        exprs.head, exprs(1).eval(null).asInstanceOf[Int]),
-      "built-in")
-
-  def hyperplaneFast(vec: Column, nPlanes: Int): Column = {
-    register(SparkSession.active)
+  def hyperplaneFast(vec: Column, nPlanes: Int): Column =
     org.apache.spark.sql.functions.call_function(
       "hyperplane_signature", vec, org.apache.spark.sql.functions.lit(nPlanes))
-  }
 }

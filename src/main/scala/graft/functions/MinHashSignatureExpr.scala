@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -48,17 +47,7 @@ case class MinHashSignatureExpr(child: Expression, numHashes: Int)
 }
 
 object MinHashSignatureExpr {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_signature",
-      exprs => MinHashSignatureExpr(
-        exprs.head,
-        exprs(1).eval(null).asInstanceOf[Int]),
-      "built-in")
-
-  def minhashFast(shingles: Column, numHashes: Int): Column = {
-    register(SparkSession.active)
+  def minhashFast(shingles: Column, numHashes: Int): Column =
     org.apache.spark.sql.functions.call_function(
       "minhash_signature", shingles, org.apache.spark.sql.functions.lit(numHashes))
-  }
 }

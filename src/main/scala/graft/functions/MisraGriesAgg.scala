@@ -4,7 +4,7 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -156,26 +156,11 @@ case class MisraGriesFreqItems(
 }
 
 object MisraGriesFreqItems {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "misra_gries_freq_items",
-      exprs => MisraGriesFreqItems(
-        exprs.head,
-        exprs(1).eval(null) match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => other.toString.toInt
-        }),
-      "built-in")
-
   /** `struct(total, items)` over all rows: true element-instance count + a
     * candidate superset of every element with frequency > total/capacity.
-    * `c` must be ARRAY<STRING>; registers on the session that owns the
-    * calling DataFrame — pass it explicitly.
+    * `c` must be ARRAY<STRING>.
     */
-  def freqItems(spark: SparkSession, c: Column, capacity: Int): Column = {
-    register(spark)
+  def freqItems(c: Column, capacity: Int): Column =
     org.apache.spark.sql.functions.call_function(
       "misra_gries_freq_items", c, org.apache.spark.sql.functions.lit(capacity))
-  }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -101,18 +100,10 @@ case class QuantizedDot(left: Expression, right: Expression)
 }
 
 object QuantizedDot {
-  /** SQL registration: `SELECT quantized_dot(a, b)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "quantized_dot",
-      exprs => QuantizedDot(exprs(0), exprs(1)),
-      "built-in")
-
-  /** Column-level entry point (resolves through the function registry —
-    * Spark 4 keeps Expression→Column construction internal).
+  /** Column-level entry point: a call of the session's `quantized_dot`
+    * ([[NativeFunctions]]), because Spark 4 keeps Expression→Column
+    * construction internal.
     */
-  def quantizedDotFast(a: Column, b: Column): Column = {
-    register(SparkSession.active)
+  def quantizedDotFast(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("quantized_dot", a, b)
-  }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -47,16 +46,8 @@ case class SimHash64Expr(child: Expression)
 }
 
 object SimHash64Expr {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64",
-      exprs => SimHash64Expr(exprs.head),
-      "built-in")
-
-  def simhash64Fast(tokens: Column): Column = {
-    register(SparkSession.active)
+  def simhash64Fast(tokens: Column): Column =
     org.apache.spark.sql.functions.call_function("simhash64", tokens)
-  }
 
   private[graft] def hashToken(s: String): Long = Sha60.hashString(s)
 }

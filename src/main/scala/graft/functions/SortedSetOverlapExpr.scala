@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -90,20 +89,12 @@ object SortedSetOverlap {
     InternalRow(inter, union)
   }
 
-  /** SQL registration: `SELECT sorted_set_overlap(a, b)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_set_overlap",
-      exprs => SortedSetOverlap(exprs(0), exprs(1)),
-      "built-in")
-
-  /** Column-level entry point (Spark 4 keeps Expression→Column construction
-    * internal, so this resolves through the function registry).
+  /** Column-level entry point: a call of the session's `sorted_set_overlap`
+    * ([[NativeFunctions]]), because Spark 4 keeps Expression→Column
+    * construction internal.
     */
-  def overlapFast(a: Column, b: Column): Column = {
-    register(SparkSession.active)
+  def overlapFast(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("sorted_set_overlap", a, b)
-  }
 
   /** Jaccard similarity from the overlap counts — bit-identical to
     * `size(array_intersect)/size(array_union)` double division on

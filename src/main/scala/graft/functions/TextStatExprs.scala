@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types._
@@ -45,16 +44,8 @@ case class TokenCountExpr(child: Expression) extends UnaryExpression {
 }
 
 object TokenCountExpr {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_count_fast",
-      exprs => TokenCountExpr(exprs.head),
-      "built-in")
-
-  def fast(text: Column): Column = {
-    register(SparkSession.active)
+  def fast(text: Column): Column =
     org.apache.spark.sql.functions.call_function("token_count_fast", text)
-  }
 }
 
 /** See [[TokenCountExpr]]; counts `[.,;:!?'"()\[\]{}-]` characters. */
@@ -86,16 +77,8 @@ case class PunctCountExpr(child: Expression) extends UnaryExpression {
 }
 
 object PunctCountExpr {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "punct_count_fast",
-      exprs => PunctCountExpr(exprs.head),
-      "built-in")
-
-  def fast(text: Column): Column = {
-    register(SparkSession.active)
+  def fast(text: Column): Column =
     org.apache.spark.sql.functions.call_function("punct_count_fast", text)
-  }
 }
 
 /** See [[TokenCountExpr]]; whole-word hit count of an ASCII `[a-z0-9_]+`
@@ -172,16 +155,8 @@ case class AlnumRunsExpr(child: Expression) extends UnaryExpression {
 }
 
 object AlnumRunsExpr {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "alnum_runs",
-      exprs => AlnumRunsExpr(exprs.head),
-      "built-in")
-
-  def fast(text: Column): Column = {
-    register(SparkSession.active)
+  def fast(text: Column): Column =
     org.apache.spark.sql.functions.call_function("alnum_runs", text)
-  }
 }
 
 /** Native twin of `regexp_extract_all(s, "[a-z0-9]", 0)` (see
@@ -215,16 +190,8 @@ case class AlnumCharsExpr(child: Expression) extends UnaryExpression {
 }
 
 object AlnumCharsExpr {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "alnum_chars",
-      exprs => AlnumCharsExpr(exprs.head),
-      "built-in")
-
-  def fast(text: Column): Column = {
-    register(SparkSession.active)
+  def fast(text: Column): Column =
     org.apache.spark.sql.functions.call_function("alnum_chars", text)
-  }
 }
 
 /** Native twin of the FastSS deletion-neighborhood hash pass (see
@@ -259,16 +226,8 @@ case class DeletionHashesExpr(child: Expression) extends UnaryExpression {
 }
 
 object DeletionHashesExpr {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "deletion_hashes",
-      exprs => DeletionHashesExpr(exprs.head),
-      "built-in")
-
-  def fast(text: Column): Column = {
-    register(SparkSession.active)
+  def fast(text: Column): Column =
     org.apache.spark.sql.functions.call_function("deletion_hashes", text)
-  }
 }
 
 /** Native twin of the BPE-ish sub-word token count (see
@@ -302,16 +261,8 @@ case class SubwordCountExpr(child: Expression) extends UnaryExpression {
 }
 
 object SubwordCountExpr {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "subword_count",
-      exprs => SubwordCountExpr(exprs.head),
-      "built-in")
-
-  def fast(text: Column): Column = {
-    register(SparkSession.active)
+  def fast(text: Column): Column =
     org.apache.spark.sql.functions.call_function("subword_count", text)
-  }
 }
 
 /** Native twin of the adjacent-token bigram-struct pass (see
@@ -350,32 +301,13 @@ case class BigramStructsExpr(child: Expression) extends UnaryExpression {
 }
 
 object BigramStructsExpr {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bigram_structs",
-      exprs => BigramStructsExpr(exprs.head),
-      "built-in")
-
-  def fast(normalizedText: Column): Column = {
-    register(SparkSession.active)
+  def fast(normalizedText: Column): Column =
     org.apache.spark.sql.functions.call_function("bigram_structs", normalizedText)
-  }
 }
 
 object AsciiWordHitsExpr {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ascii_word_hits",
-      exprs => AsciiWordHitsExpr(
-        exprs.head,
-        exprs(1).eval(null).asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-          .toString),
-      "built-in")
-
-  def fast(text: Column, words: Seq[String]): Column = {
-    register(SparkSession.active)
+  def fast(text: Column, words: Seq[String]): Column =
     org.apache.spark.sql.functions.call_function(
       "ascii_word_hits", text,
       org.apache.spark.sql.functions.lit(words.mkString("|")))
-  }
 }

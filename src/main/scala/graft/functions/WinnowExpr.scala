@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -46,17 +45,7 @@ case class WinnowExpr(child: Expression, w: Int) extends UnaryExpression {
 }
 
 object WinnowExpr {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_fingerprints",
-      exprs => WinnowExpr(
-        exprs.head,
-        exprs(1).eval(null).asInstanceOf[Int]),
-      "built-in")
-
-  def winnowFast(shingles: Column, w: Int): Column = {
-    register(SparkSession.active)
+  def winnowFast(shingles: Column, w: Int): Column =
     org.apache.spark.sql.functions.call_function(
       "winnow_fingerprints", shingles, org.apache.spark.sql.functions.lit(w))
-  }
 }

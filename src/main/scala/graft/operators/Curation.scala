@@ -760,7 +760,7 @@ object Curation {
     val sketch = df
       .select(shingles(col(textCol), n).as("_grams"))
       .agg(graft.functions.MisraGriesFreqItems
-        .freqItems(df.sparkSession, col("_grams"), k).as("_mg"))
+        .freqItems(col("_grams"), k).as("_mg"))
     heavyGramRecount(df, textCol, n, k, sketch)
   }
 

@@ -300,13 +300,13 @@ object Dedup {
       case org.apache.spark.sql.types.LongType =>
         df.groupBy(keyCols: _*)
           .agg(graft.functions.CollectLongCapped
-            .collectCapped(df.sparkSession, col(idCol), maxSize).as("_bucket"))
+            .collectCapped(col(idCol), maxSize).as("_bucket"))
           .where(col("_bucket.total").between(minSize, maxSize))
           .select(keyCols :+ col("_bucket.ids").as("ids"): _*)
       case org.apache.spark.sql.types.StringType =>
         df.groupBy(keyCols: _*)
           .agg(graft.functions.CollectStringCapped
-            .collectCapped(df.sparkSession, col(idCol), maxSize).as("_bucket"))
+            .collectCapped(col(idCol), maxSize).as("_bucket"))
           .where(col("_bucket.total").between(minSize, maxSize))
           .select(keyCols :+ col("_bucket.ids").as("ids"): _*)
       case _ =>
@@ -1196,7 +1196,6 @@ object Dedup {
       idCol: String,
       textCol: String,
       fpp: Double = 0.01): DataFrame = {
-    val spark = delta.sparkSession
     val norm = normalizeText(col(textCol))
     val h64 = xxhash64(norm)
     val h128 = md5(norm)
@@ -1205,10 +1204,10 @@ object Dedup {
     val n = math.max(deltaKeyed.count(), 1L)
     val (numBits, numHashes) = graft.functions.BloomParams.size(n, fpp)
     val bloom = deltaKeyed
-      .agg(graft.functions.BloomFilterAgg.bloomBuild(spark, col("_h64"), numBits, numHashes))
+      .agg(graft.functions.BloomFilterAgg.bloomBuild(col("_h64"), numBits, numHashes))
       .head.getAs[Array[Byte]](0)
     val corpusHits = corpus
-      .where(graft.functions.BloomFilterAgg.bloomProbe(spark, bloom, h64))
+      .where(graft.functions.BloomFilterAgg.bloomProbe(bloom, h64))
       .select(h128.as("_h"))
       .distinct()
     deltaKeyed

@@ -751,7 +751,7 @@ object DocStream {
     docs
       .select(TextFunctions.shingles(col(textCol), n).as("_grams"))
       .agg(graft.functions.MisraGriesFreqItems
-        .freqItems(docs.sparkSession, col("_grams"), k).as("_mg"))
+        .freqItems(col("_grams"), k).as("_mg"))
 
   /** Shared gate predicates: `_q_ok` (quality score ≥ threshold) and `_r_ok`
     * (distinct-token ratio ≥ 0.3, the repetition gate). Both [[curate]] and

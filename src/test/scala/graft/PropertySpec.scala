@@ -385,7 +385,7 @@ class PropertySpec extends SparkSpec {
         s"serialize/deserialize must round-trip (case $i)")
       // distributed build over shuffled partitions must equal the driver build
       val distBytes = keys.toDF("k").repartition(3 + i % 5)
-        .agg(BloomFilterAgg.bloomBuild(spark, col("k"), m, k))
+        .agg(BloomFilterAgg.bloomBuild(col("k"), m, k))
         .head.getAs[Array[Byte]](0)
       assert(java.util.Arrays.equals(bytes, distBytes),
         s"distributed OR-merge build must match the sequential build (case $i)")

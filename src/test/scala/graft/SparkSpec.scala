@@ -1,14 +1,19 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session per suite (lazy, reused across tests), built
   * through the engine's one session factory on a fixed four cores so the
-  * specs do not depend on the host.
+  * specs do not depend on the host. Each suite releases it when done, so
+  * no suite hands its temp views, caches or persisted RDDs to the next.
   */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = graft.core.GraftSession.local(cores = 4)
+
+  override protected def afterAll(): Unit =
+    try graft.core.GraftSession.release(spark) finally super.afterAll()
 
   /** Runs `f` and counts the Spark jobs that ran meanwhile. */
   def countingJobs[T](f: => T): (T, Long) = {

@@ -22,7 +22,8 @@ class GraftSessionSpec extends SparkSpec {
       "spark.sql.codegen.cache.maxEntries" -> "10000",
       "spark.file.transferTo" -> "false",
       "spark.hadoop.fs.file.impl" -> "graft.core.NoChmodLocalFileSystem",
-      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.core.NoChmodLocalFs"))
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.core.NoChmodLocalFs",
+      "spark.sql.extensions" -> "graft.functions.NativeFunctions"))
     val host = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors)
     assert(GraftSession.hostCores == host)

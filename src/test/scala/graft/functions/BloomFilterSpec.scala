@@ -37,14 +37,14 @@ class BloomFilterSpec extends SparkSpec {
     val df = keys.toDF("k").repartition(8)
     val (m, numHashes) = BloomParams.size(keys.length.toLong, 0.01)
     val bloom = df
-      .agg(BloomFilterAgg.bloomBuild(spark, $"k", m, numHashes))
+      .agg(BloomFilterAgg.bloomBuild($"k", m, numHashes))
       .head.getAs[Array[Byte]](0)
 
-    val inHits = df.where(BloomFilterAgg.bloomProbe(spark, bloom, $"k")).count()
+    val inHits = df.where(BloomFilterAgg.bloomProbe(bloom, $"k")).count()
     assert(inHits == keys.length.toLong, "a Bloom filter must never false-negative")
 
     val absent = (1L to 20000L).map(i => -i * 40503L - 7L).toDF("k")
-    val fp = absent.where(BloomFilterAgg.bloomProbe(spark, bloom, $"k")).count()
+    val fp = absent.where(BloomFilterAgg.bloomProbe(bloom, $"k")).count()
     assert(fp < 20000L * 0.03, s"false-positive rate should be ~1%, got $fp/20000")
   }
 
@@ -54,16 +54,16 @@ class BloomFilterSpec extends SparkSpec {
     val keys = (1L to 500L).toDF("k")
     val (m, numHashes) = BloomParams.size(500L, 0.01)
     val one = keys.coalesce(1)
-      .agg(BloomFilterAgg.bloomBuild(spark, $"k", m, numHashes)).head.getAs[Array[Byte]](0)
+      .agg(BloomFilterAgg.bloomBuild($"k", m, numHashes)).head.getAs[Array[Byte]](0)
     val eight = keys.repartition(8)
-      .agg(BloomFilterAgg.bloomBuild(spark, $"k", m, numHashes)).head.getAs[Array[Byte]](0)
+      .agg(BloomFilterAgg.bloomBuild($"k", m, numHashes)).head.getAs[Array[Byte]](0)
     assert(java.util.Arrays.equals(one, eight))
   }
 
   test("non-BIGINT key is an analysis-time error, not an executor crash") {
     val df = Seq("a", "b").toDF("s")
     val err = intercept[org.apache.spark.sql.AnalysisException] {
-      df.agg(BloomFilterAgg.bloomBuild(spark, $"s", 64, 3)).head()
+      df.agg(BloomFilterAgg.bloomBuild($"s", 64, 3)).head()
     }
     assert(err.getMessage.toLowerCase.contains("bigint"))
   }

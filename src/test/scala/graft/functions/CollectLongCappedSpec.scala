@@ -65,7 +65,7 @@ class CollectLongCappedSpec extends SparkSpec {
     val df = (1 to 500).map(i => (s"doc-$i", s"k${i % 37}")).toDF("id", "k") // within cap
       .union(Seq.tabulate(100)(i => (s"hot-$i", "hot")).toDF("id", "k")) // overflows cap
     val out = df.groupBy($"k")
-      .agg(CollectStringCapped.collectCapped(spark, $"id", 50).as("b"))
+      .agg(CollectStringCapped.collectCapped($"id", 50).as("b"))
       .select($"k", $"b.total".as("n"), array_sort($"b.ids").as("ids"))
     val hot = out.where($"k" === "hot").head()
     assert(hot.getLong(1) == 100L && hot.getSeq[String](2).length == 50)
@@ -78,7 +78,7 @@ class CollectLongCappedSpec extends SparkSpec {
   test("string variant survives serialize/merge round-trips with many partitions") {
     val df = (1 to 300).map(i => (s"v$i", "one")).toDF("id", "k").repartition(13)
     val r = df.groupBy($"k")
-      .agg(CollectStringCapped.collectCapped(spark, $"id", 9).as("b"))
+      .agg(CollectStringCapped.collectCapped($"id", 9).as("b"))
       .select($"b.total", $"b.ids")
       .head()
     assert(r.getLong(0) == 300L && r.getSeq[String](1).length == 9)

@@ -22,7 +22,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("registered SQL function works and null-propagates") {
-    CosineSimilarity.register(spark)
     Seq((Seq(1.0, 0.0), Seq(0.0, 1.0))).toDF("a", "b").createOrReplaceTempView("v")
     try {
       val orth = spark.sql("SELECT cosine_similarity(a, b) AS c FROM v").head().getDouble(0)

@@ -34,7 +34,7 @@ class MisraGriesSpec extends SparkSpec {
     val elems = (1 to 5).flatMap(i => Seq.fill(1001)(s"hot$i")) ++
       (1 to 500).flatMap(i => Seq.fill(10)(s"cold$i"))
     val df = elems.grouped(13).map(_.toArray).toSeq.toDF("a")
-    val r = df.agg(MisraGriesFreqItems.freqItems(spark, $"a", 10).as("mg"))
+    val r = df.agg(MisraGriesFreqItems.freqItems($"a", 10).as("mg"))
       .select($"mg.total", $"mg.items").head()
     val total = r.getLong(0)
     val items = r.getSeq[String](1).toSet
@@ -76,7 +76,7 @@ class MisraGriesSpec extends SparkSpec {
     // 4 trigram instances, threshold 4/3 → count ≥ 2
     assert(got == Set(("one two three", 2L)))
     val err = intercept[Exception] {
-      df.agg(MisraGriesFreqItems.freqItems(spark, $"doc_id", 4)).collect()
+      df.agg(MisraGriesFreqItems.freqItems($"doc_id", 4)).collect()
     }
     assert(err.getMessage.toLowerCase.contains("array"))
   }

@@ -26,7 +26,6 @@ class QuantizedDotSpec extends SparkSpec {
   }
 
   test("registered SQL function works, int arrays accepted, null-propagates") {
-    QuantizedDot.register(spark)
     Seq((Seq(1, -2, 3), Seq(4L, 5L, 6L))).toDF("a", "b").createOrReplaceTempView("qd_v")
     try {
       val mixed = spark.sql("SELECT quantized_dot(a, b) AS d FROM qd_v").head().getLong(0)
@@ -49,7 +48,6 @@ class QuantizedDotSpec extends SparkSpec {
   }
 
   test("dimension mismatch and element nulls yield NULL, not a truncated score") {
-    QuantizedDot.register(spark)
     // interpreted path
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types.{ArrayType, IntegerType}

@@ -46,8 +46,7 @@ class TextStatExprsSpec extends SparkSpec {
     .unionByName(Seq((999L, null: String)).toDF("id", "t"))
 
   private def assertColsEqual(fast: => Column, hof: => Column): Unit = {
-    val d = df // force the session before the columns register temp functions
-    val rows = d.select(col("id"), fast.as("fast"), hof.as("hof")).collect()
+    val rows = df.select(col("id"), fast.as("fast"), hof.as("hof")).collect()
     rows.foreach { r =>
       val f = if (r.isNullAt(1)) null else r.get(1)
       val h = if (r.isNullAt(2)) null else r.get(2)
