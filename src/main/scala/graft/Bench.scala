@@ -229,19 +229,24 @@ object Bench {
             // unbounded driver stall — cancel the query's job group at
             // the smaller of the remaining budget and the per-query cap.
             // Streaming micro-batch jobs run on their own threads outside
-            // the group, where cancelJobGroup cannot reach — the stream
-            // deadline below has the harness stop() those queries at the
-            // same cap, so streaming blowups are bounded too (r17's two
-            // budget-eaters were both streaming-shaped).
+            // the group, where cancelJobGroup cannot reach, so the
+            // watchdog also stops every active stream; the stream harness
+            // turns a stopped stream into a thrown error, never a partial
+            // sink (r17's two budget-eaters were both streaming-shaped).
+            // It repeats every second past the cap, so a stream the query
+            // starts after a stop is stopped too.
             val capSec = math.min(Sf1QueryCapSec, math.max(30.0, Sf1BudgetSec - spent))
             val group = s"bench-sf1-$name"
             spark.sparkContext.setJobGroup(group, group, interruptOnCancel = true)
             val watchdog = new java.util.Timer("bench-sf1-watchdog", true)
             watchdog.schedule(new java.util.TimerTask {
-              def run(): Unit = spark.sparkContext.cancelJobGroup(group)
-            }, (capSec * 1000).toLong)
-            graft.queries.Pipeline.streamDeadlineNanos =
-              System.nanoTime() + (capSec * 1e9).toLong
+              def run(): Unit = {
+                spark.sparkContext.cancelJobGroup(group)
+                spark.streams.active.foreach { q =>
+                  try q.stop() catch { case scala.util.control.NonFatal(_) => }
+                }
+              }
+            }, (capSec * 1000).toLong, 1000L)
             // per-entry executor telemetry (run/cpu/gc), same split as the
             // main pass: r17's 16.9x q257 entry carried no gc_ms, so
             // pressure-vs-plan could not be adjudicated from the artifact
@@ -251,7 +256,6 @@ object Bench {
               finally {
                 watchdog.cancel()
                 spark.sparkContext.clearJobGroup()
-                graft.queries.Pipeline.streamDeadlineNanos = Long.MaxValue
               }
             val (run1, cpu1, gc1) = executorMs()
             System.gc()

@@ -29,6 +29,12 @@ import org.apache.spark.storage.StorageLevel
   *     (64 MB, parquet-block-sized). At 100 TB the computed target exceeds
   *     the current partition count and the re-persist never triggers; at
   *     small scale it collapses micro-tasks.
+  *
+  * The cached batches are built uncompressed: every engine session turns
+  * the in-memory columnar compression off when it is built (see
+  * [[GraftSession.settings]]), since these caches are intra-query scratch
+  * that [[GraftSession.release]] drops after the query. Nothing here writes
+  * the session conf, so concurrent callers on one session do not race.
   */
 object Caching {
 
@@ -53,48 +59,19 @@ object Caching {
     rightSized(df, n => _.repartition(n, keys: _*))
 
   private def rightSized(
-      df: DataFrame, reshape: Int => DataFrame => DataFrame): DataFrame =
-    uncompressedCache(df.sparkSession) {
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      // InMemoryRelation stats are exact once materialized
-      val bytes = p.queryExecution.optimizedPlan.stats.sizeInBytes
-      val parts = p.rdd.getNumPartitions
-      val target = math.max(1L, (bytes.toLong + targetPartitionBytes - 1) / targetPartitionBytes)
-      if (parts > 2 * target && parts > 4) {
-        val c = reshape(math.min(target, Int.MaxValue.toLong).toInt)(p)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        c.count()
-        p.unpersist()
-        c
-      } else p
-    }
-
-  /** Scope `spark.sql.inMemoryColumnarStorage.compressed=false` around the
-    * persist calls (the conf is consulted when `CacheManager.cacheQuery`
-    * builds the `InMemoryRelation`, i.e. inside `persist()`): the frames
-    * cached here are EPHEMERAL intra-query scratch — built once, read by
-    * two-to-three consumers, unpersisted by the harness sweep — so the
-    * per-column RLE/dictionary compression pass is CPU spent to shrink
-    * memory nothing lives long enough to need, at any scale (profiled as
-    * `CompressibleColumnBuilder.gatherCompressibilityStats` RUNNABLE
-    * stacks across the span family and the quantile operators, r19;
-    * measured −12% on the six hottest cache-building queries). Storage
-    * level stays MEMORY_AND_DISK, so memory pressure spills instead of
-    * evicting. Same single-threaded-harness caveat as the streaming
-    * shuffle-partition pin (Pipeline.startRightSized): the pin briefly
-    * mutates the shared session conf; a concurrent caller should scope
-    * via `spark.newSession()`.
-    */
-  private def uncompressedCache[A](
-      spark: org.apache.spark.sql.SparkSession)(body: => A): A = {
-    val key = "spark.sql.inMemoryColumnarStorage.compressed"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
+      df: DataFrame, reshape: Int => DataFrame => DataFrame): DataFrame = {
+    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+    p.count()
+    // InMemoryRelation stats are exact once materialized
+    val bytes = p.queryExecution.optimizedPlan.stats.sizeInBytes
+    val parts = p.rdd.getNumPartitions
+    val target = math.max(1L, (bytes.toLong + targetPartitionBytes - 1) / targetPartitionBytes)
+    if (parts > 2 * target && parts > 4) {
+      val c = reshape(math.min(target, Int.MaxValue.toLong).toInt)(p)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      c.count()
+      p.unpersist()
+      c
+    } else p
   }
 }

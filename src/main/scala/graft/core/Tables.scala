@@ -5,7 +5,8 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
 
 /** Table access over a directory of parquet files (one file/dir per table).
   *
@@ -28,7 +29,10 @@ import org.apache.spark.sql.types.StructType
   * inference (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`,
   * `spark.sql.caseSensitive`). The memo misses, and the read infers again,
   * when the table is rewritten, gains or loses a file, or one of those confs
-  * changes; a new session starts with an empty memo.
+  * changes; a new session starts with an empty memo. The engine writes none
+  * of those confs while it runs (the ones it needs are fixed when the
+  * session is built, see [[GraftSession.settings]]), so within a session a
+  * path infers once however its reads interleave with other tables'.
   */
 final case class Tables(spark: SparkSession, dir: String) {
   def table(name: String): DataFrame = Tables.read(spark, s"$dir/$name.parquet")
@@ -40,27 +44,8 @@ final case class Tables(spark: SparkSession, dir: String) {
   def part: DataFrame = table("part")
   def orders: DataFrame = table("orders")
   def lineitem: DataFrame = table("lineitem")
-  /** The events table's `ts` encoding has varied across data generators:
-    * TIMESTAMP(NANOS) (which Spark's vectorized reader rejects — read as
-    * nanosecond Longs via the legacy conf and truncate with integer `div`,
-    * not `/`: double division loses precision past 2^53 ns) or plain
-    * timestamp[us] (TIMESTAMP_NTZ to Spark — cast to session-TZ timestamp,
-    * matching the oracle's CAST(ts AS TIMESTAMP)). Branch on the loaded
-    * schema so either encoding reads correctly.
-    */
-  def events: DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr}
-    import org.apache.spark.sql.types.{LongType, TimestampType}
-    // harmless when the file carries real timestamps; required to even
-    // resolve the schema when it carries TIMESTAMP(NANOS)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = table("events")
-    raw.schema("ts").dataType match {
-      case LongType      => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case TimestampType => raw
-      case _             => raw.withColumn("ts", col("ts").cast(TimestampType))
-    }
-  }
+  /** The events table, its `ts` decoded by [[Tables.eventTimes]]. */
+  def events: DataFrame = Tables.eventTimes(table("events"))
   def documents: DataFrame = table("documents")
   def embeddings: DataFrame = table("embeddings")
 }
@@ -92,6 +77,23 @@ object Tables {
         df
       case schema => spark.read.schema(schema).parquet(path)
     }
+  }
+
+  /** `events` (batch or stream) with its `ts` as a session-TZ timestamp,
+    * whichever encoding the files carry; the encoding has varied across
+    * data generators:
+    *  - INT64 `TIMESTAMP(NANOS)`, which the session reads as nanosecond
+    *    Longs (see [[GraftSession.settings]]): truncated to microseconds
+    *    with integer `div`, not `/`, since double division loses precision
+    *    past 2^53 ns;
+    *  - `timestamp[us]` with a zone: already a timestamp;
+    *  - `timestamp[us]` without one (TIMESTAMP_NTZ to Spark): cast to the
+    *    session-TZ timestamp, matching the oracle's `CAST(ts AS TIMESTAMP)`.
+    */
+  def eventTimes(events: DataFrame): DataFrame = events.schema("ts").dataType match {
+    case LongType      => events.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+    case TimestampType => events
+    case _             => events.withColumn("ts", col("ts").cast(TimestampType))
   }
 
   /** `(path, length, modificationTime)` of every file under `path` (the

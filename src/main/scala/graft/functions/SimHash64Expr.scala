@@ -48,6 +48,4 @@ case class SimHash64Expr(child: Expression)
 object SimHash64Expr {
   def simhash64Fast(tokens: Column): Column =
     org.apache.spark.sql.functions.call_function("simhash64", tokens)
-
-  private[graft] def hashToken(s: String): Long = Sha60.hashString(s)
 }

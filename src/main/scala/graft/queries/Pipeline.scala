@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{GraftSession, Tables}
 import graft.functions.TextFunctions
 import graft.functions.TextFunctions._
 import graft.operators.{Analytics, Behavior, Curation, Dedup, Quantize, Retrieval, Similarity, Sketches, Tokenizer}
@@ -1249,124 +1249,25 @@ object Pipeline {
       .orderBy(col("eval_id"))
   }
 
-  /** Scratch directory for the through-the-stream certification queries,
-    * registered for recursive deletion at JVM exit: read-back DataFrames
-    * stay valid for the whole session, while repeated verify/bench runs
-    * stop accumulating corpus copies in the system temp dir (Bench runs
-    * every query twice; each run previously left a full drop + checkpoint
-    * + sink tree behind).
-    *
-    * ONE static shutdown hook drains a concurrent queue of registered
-    * trees — a hook per invocation would accumulate unboundedly across a
-    * long verify+bench session (the JVM keeps every registered hook thread
-    * alive until exit).
+  /** Reaps the stream certification queries' scratch trees; the same
+    * reap as [[GraftSession.release]]'s, for harnesses that release a
+    * session step by step (perfbench's op loop).
     */
-  private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private lazy val scratchHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      var dir = scratchDirs.poll()
-      while (dir != null) {
-        // per-dir isolation: ANY per-tree failure (an already-reaped tree,
-        // a SecurityException, a stray runtime error from the walk) must
-        // not abort the hook thread — that would leak every
-        // later-registered tree still in the queue
-        try {
-          val walk = java.nio.file.Files.walk(dir)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          finally walk.close()
-        } catch { case scala.util.control.NonFatal(_) => }
-        dir = scratchDirs.poll()
-      }
-    }))
-  /** Scratch base: a RAM-backed filesystem when one exists (stream
-    * checkpoint commits fsync offset/commit/state files every micro-batch;
-    * on the bench host that disk latency was pure fixed overhead across
-    * the whole streaming tier), the system temp dir otherwise, either way
-    * overridable via SPARK_GRAFT_SCRATCH. Certification scratch only —
-    * drops, checkpoints, sinks whose lifetime is one query; a production
-    * deployment points checkpointLocation at durable storage and never
-    * sees this path.
-    */
-  private lazy val scratchBase: Option[java.nio.file.Path] =
-    sys.env.get("SPARK_GRAFT_SCRATCH")
-      .orElse(Some("/dev/shm").filter(p => java.nio.file.Files.isWritable(java.nio.file.Paths.get(p))))
-      .map(java.nio.file.Paths.get(_))
+  def reapScratch(): Unit = GraftSession.reapScratch()
 
-  private[graft] def scratchDir(prefix: String): String = {
-    scratchHook
-    val dir = scratchBase match {
-      case Some(base) => java.nio.file.Files.createTempDirectory(base, prefix)
-      case None       => java.nio.file.Files.createTempDirectory(prefix)
-    }
-    scratchDirs.add(dir)
-    dir.toString
-  }
-
-  /** Reap every registered scratch tree NOW. For the per-query harness
-    * loops (through [[graft.core.GraftSession.release]], after each
-    * query's result is materialized): with the RAM-backed scratch base,
-    * waiting for the shutdown hook would accumulate every stream query's
-    * drop + checkpoint + sink tree in memory for the whole session — eager
-    * reaping bounds RAM use to one query's tree. Only safe once the query's result is
-    * MATERIALIZED (read-back frames reference these paths lazily).
+  /** `query.processAllAvailable()`, and a throw when the query is no longer
+    * active after it. `processAllAvailable` returns normally on a query
+    * that was stopped, so without the check a stop from outside (Bench's
+    * sf1 cap stops every active stream at the cap) would let the operator
+    * read a PARTIAL sink and record a truncated run as a success. A query
+    * that failed throws from `processAllAvailable` itself.
     */
-  def reapScratch(): Unit = {
-    var dir = scratchDirs.poll()
-    while (dir != null) {
-      try {
-        val walk = java.nio.file.Files.walk(dir)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally walk.close()
-      } catch { case scala.util.control.NonFatal(_) => }
-      dir = scratchDirs.poll()
-    }
-  }
-
-  /** Hard wall-clock deadline (absolute `System.nanoTime`) for the
-    * certification-stream harnesses below. `Long.MaxValue` (the default,
-    * and the value outside bench scaling passes) means unbounded — the
-    * normal Verify/Bench main-pass behavior. The bench 10× scaling pass
-    * sets it around each candidate: its job-group watchdog cannot cancel
-    * streaming micro-batch jobs (they run on the stream's own threads
-    * outside the group), so without this a super-linear streaming plan at
-    * 10× — the exact regression that pass hunts — would stall the driver
-    * unboundedly instead of becoming a recorded -1. At the deadline the
-    * query is `stop()`ped, `processAllAvailable` unblocks, and the wait
-    * THROWS — a deliberate stop() is a clean termination that would
-    * otherwise return normally, let the operator read a PARTIAL sink, and
-    * record a truncated run as a successful ~cap-second measurement; the
-    * throw makes each operator's own `finally` release its state and the
-    * harness record a deterministic -1.
-    */
-  @volatile private[graft] var streamDeadlineNanos: Long = Long.MaxValue
-
-  /** `query.processAllAvailable()` bounded by [[streamDeadlineNanos]]:
-    * a daemon timer stops the query at the deadline so the wait can never
-    * outlive the harness cap, and a fired deadline always surfaces as an
-    * exception (see [[streamDeadlineNanos]]). No-op wrapper when no
-    * deadline is set.
-    */
-  private def awaitAllAvailable(
+  private[graft] def awaitAllAvailable(
       query: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val deadline = streamDeadlineNanos
-    if (deadline == Long.MaxValue) query.processAllAvailable()
-    else {
-      val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val remainMs = math.max(1L, (deadline - System.nanoTime()) / 1000000L)
-      val timer = new java.util.Timer("graft-stream-deadline", true)
-      timer.schedule(new java.util.TimerTask {
-        def run(): Unit = {
-          fired.set(true)
-          try query.stop() catch { case scala.util.control.NonFatal(_) => }
-        }
-      }, remainMs)
-      try query.processAllAvailable() finally timer.cancel()
-      if (fired.get())
-        throw new IllegalStateException(
-          "graft stream deadline exceeded: query stopped by the harness cap")
-    }
+    query.processAllAvailable()
+    if (!query.isActive)
+      throw new IllegalStateException(
+        s"stream ${query.id} was stopped before it processed all available input")
   }
 
   /** Shared drop-directory harness for the stream-path certifications:
@@ -1385,7 +1286,7 @@ object Pipeline {
       perTrigger: Int,
       prefix: String)(
       start: (DataFrame, String) => org.apache.spark.sql.streaming.StreamingQuery): String = {
-    val tmp = scratchDir(prefix)
+    val tmp = GraftSession.scratchDir(prefix)
     val dropDir = s"$tmp/drops"
     (if (files > 0) docs.repartition(files) else docs).write.parquet(dropDir)
     val reader = spark.readStream.schema(spark.read.parquet(dropDir).schema)
@@ -1398,10 +1299,10 @@ object Pipeline {
   }
 
   /** Start a certification stream with right-sized stateful micro-batch
-    * shuffles: each tiny trigger would otherwise inherit the session's 32
-    * shuffle partitions for its state aggregation (32 state-store tasks
-    * per trigger, ~all parked — measured run/cpu = 15× on the
-    * corpus-report stream). Streaming clones the session conf at query
+    * shuffles: each tiny trigger would otherwise inherit the session's
+    * shuffle partitions (one per core) for its state aggregation (on a
+    * 32-core host, 32 state-store tasks per trigger, ~all parked — measured
+    * run/cpu = 15× on the corpus-report stream). Streaming clones the session conf at query
     * START, so scoping the change around start() pins the stream to 4
     * state partitions without touching the batch plans before/after. (The
     * state partition count is fixed at the first checkpoint anyway — these
@@ -1410,8 +1311,11 @@ object Pipeline {
     *
     * Not thread-safe by design: the pin mutates the SHARED session conf for
     * the duration of start(), so a batch query planned concurrently on
-    * another thread would silently inherit 4 shuffle partitions. Fine for
-    * the single-threaded Verify/Bench harness this serves; a concurrent
+    * another thread would silently inherit 4 shuffle partitions. Every
+    * caller is a SparkEntry certification query, and the per-query loops
+    * (Bench, Verify, perfbench) run those one at a time. The medallion
+    * orchestrator (`SetupOrchestrator`) does run each layer's steps on
+    * several threads, but none of its steps starts a stream. A concurrent
     * caller should scope the pin via `spark.newSession()` instead.
     */
   private def startRightSized(spark: SparkSession)(
@@ -1455,7 +1359,7 @@ object Pipeline {
       restartAfter: Int,
       prefix: String)(
       start: (DataFrame, String) => org.apache.spark.sql.streaming.StreamingQuery): String = {
-    val tmp = scratchDir(prefix)
+    val tmp = GraftSession.scratchDir(prefix)
     val dropDir = s"$tmp/drops"
     new java.io.File(dropDir).mkdirs()
     val stream = spark.readStream.schema(drops.head.schema).parquet(dropDir)
@@ -1931,7 +1835,7 @@ object Pipeline {
     * ShardSpec-pinned.
     */
   def trainingShardManifest(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = scratchDir("graft_q131_")
+    val tmp = GraftSession.scratchDir("graft_q131_")
     Curation.writeCurriculumShards(
       Curation.curriculumOrder(Tables(spark, dir).documents, "doc_id", "text",
         seed = 42L),
@@ -1990,7 +1894,7 @@ object Pipeline {
       DocStream.dedupAgainstCorpus(delta, hash0), st0.index, minJaccard = 0.5)
     val curated = admitted.where(
       graft.functions.TextFunctions.qualityScore(col("text")) >= 0.75)
-    val tmp = scratchDir("graft_q134_")
+    val tmp = GraftSession.scratchDir("graft_q134_")
     Curation.writeCurriculumShards(
       Curation.curriculumOrder(curated, "doc_id", "text", seed = 42L),
       s"$tmp/shards", shardsPerEpoch = 8, maxRecordsPerFile = 100)
@@ -2507,7 +2411,7 @@ object Pipeline {
   def checkpointedEmbeddingRefresh(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.DocStream
     val e = Tables(spark, dir).embeddings
-    val tmp = scratchDir("graft_q130_")
+    val tmp = GraftSession.scratchDir("graft_q130_")
     def commit(st: DocStream.EmbeddingIndexState, day: String): Unit =
       DocStream.writeEmbeddingIndexState(
         DocStream.compactEmbeddingIndexState(st), s"$tmp/$day")
@@ -2540,7 +2444,7 @@ object Pipeline {
       prefix: String): DataFrame = {
     import graft.streaming.DocStream
     val d = Tables(spark, dir).documents
-    val tmp = scratchDir(prefix)
+    val tmp = GraftSession.scratchDir(prefix)
 
     val delta1 = d.where(col("doc_id") % 10 === 5)
     val delta2real = d.where(col("doc_id") % 10 === 0)
@@ -2626,7 +2530,7 @@ object Pipeline {
     */
   def bm25RefreshedProbe(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables(spark, dir).documents
-    val tmp = scratchDir("graft_q142_")
+    val tmp = GraftSession.scratchDir("graft_q142_")
     val base = d.where(col("doc_id") % 5 =!= 0)
     val delta = d.where(col("doc_id") % 5 === 0)
     Retrieval.invertedIndex(base, "doc_id", "text").write.parquet(s"$tmp/postings")
@@ -2717,7 +2621,7 @@ object Pipeline {
     * works like parquet's), and money sums use the q03 decimal contract.
     */
   def orcInterchange(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = scratchDir("graft_q155_")
+    val tmp = GraftSession.scratchDir("graft_q155_")
     Tables(spark, dir).lineitem
       .select("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag", "l_shipdate")
       .write.orc(s"$tmp/lineitem_orc")
@@ -2836,7 +2740,7 @@ object Pipeline {
     */
   def bucketedColocatedJoin(spark: SparkSession, dir: String): DataFrame = {
     import graft.catalog.WarehouseCatalog
-    val cat = new WarehouseCatalog(spark, scratchDir("graft_q160_"))
+    val cat = new WarehouseCatalog(spark, GraftSession.scratchDir("graft_q160_"))
     cat.createDatabases()
     val t = Tables(spark, dir)
     cat.saveBucketed("silver", "q160_orders",
@@ -3635,7 +3539,7 @@ object Pipeline {
       .agg(
         count(lit(1)).as("n_orders"),
         sum(col("o_totalprice").cast("decimal(12,2)")).as("revenue"))
-    val tmp = scratchDir("graft_q175_")
+    val tmp = GraftSession.scratchDir("graft_q175_")
     partial(o.where(col("o_orderdate") < cut)).write.parquet(s"$tmp/state")
     graft.dml.Mutations.foldAdditiveAggregate(
         spark.read.parquet(s"$tmp/state"),

@@ -31,11 +31,9 @@ object EventStream {
   /** File-based event stream from a directory of parquet drops.
     *
     * File streams cannot infer schemas, and the events `ts` encoding has
-    * varied across data generators (TIMESTAMP(NANOS)-as-int64 vs plain
-    * timestamp[us] / TIMESTAMP_NTZ), so probe the existing files' footers
-    * with one batch-read schema resolution and branch — nanos-as-long gets
-    * the integer-`div` truncation (as in graft.core.Tables.events), real
-    * timestamps get a session-TZ cast.
+    * varied across data generators, so one batch-read schema resolution
+    * probes the existing files' footers and the stream's `ts` is decoded by
+    * the same [[graft.core.Tables.eventTimes]] as the batch events table.
     *
     * Caveat (documented assumption): the probe runs ONCE at stream start.
     * If the directory is empty then, [[eventSchemaMicros]] — the current
@@ -45,18 +43,11 @@ object EventStream {
     * first drop lands, or pass a dir seeded with one representative file.
     */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    // harmless for real-timestamp files; required to resolve TIMESTAMP(NANOS)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // empty drop directory → nothing to probe → assume the current encoding
     val probed =
       try spark.read.parquet(dir).schema
       catch { case _: org.apache.spark.sql.AnalysisException => eventSchemaMicros }
-    val stream = spark.readStream.schema(probed).parquet(dir)
-    probed("ts").dataType match {
-      case LongType      => stream.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case TimestampType => stream
-      case _             => stream.withColumn("ts", col("ts").cast(TimestampType))
-    }
+    graft.core.Tables.eventTimes(spark.readStream.schema(probed).parquet(dir))
   }
 
   /** Tumbling-window counts+sums per event type with a late-data watermark.

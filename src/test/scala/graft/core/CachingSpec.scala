@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.spark.sql.execution.columnar.{DefaultCachedBatch, InMemoryRelation}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -51,28 +52,29 @@ class CachingSpec extends SparkSpec {
 
   test("eager builds uncompressed batches and restores the session conf") {
     val key = "spark.sql.inMemoryColumnarStorage.compressed"
-    // whatever the session default, eager() must put it back afterwards
-    val before = spark.conf.getOption(key)
-    val p = Caching.eager((1 to 100).toDF("v"))
-    assert(spark.conf.getOption(key) == before,
-      "eager must restore the compression conf after materializing")
-    // (the compression flag is consulted by the batch serializer from the
-    // session conf during the in-scope persist+count — Spark 4.1 keeps no
-    // public handle on the built relation to assert it from here; the
-    // scoped-off build is evidenced by the measured removal of the
-    // CompressibleColumnBuilder stacks, plans/r19/profiles/)
-    assert(p.count() == 100)
-    p.unpersist()
-
-    // and an explicit session override survives the scope round-trip
-    spark.conf.set(key, "true")
-    val q = Caching.eager((1 to 10).toDF("v"))
-    assert(spark.conf.get(key) == "true")
-    q.unpersist()
-    before match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
+    // 100k equal longs: 800 KB as plain columns, a few bytes run-length encoded
+    def cachedBytes(s: org.apache.spark.sql.SparkSession): (Long, Option[String]) = {
+      val p = Caching.eager(s.range(0, 100000).selectExpr("7L as v"))
+      assert(p.count() == 100000)
+      // the bytes of the built column buffers (the relation's size stats
+      // count the values before compression)
+      val relation = p.queryExecution.optimizedPlan.collectFirst { case r: InMemoryRelation => r }.get
+      val bytes = relation.cacheBuilder.cachedColumnBuffers.collect()
+        .map { case b: DefaultCachedBatch => b.buffers.map(_.length.toLong).sum }.sum
+      p.unpersist()
+      (bytes, s.conf.getOption(key))
     }
+    // the session is built with compression off, and eager leaves its conf as is
+    assert(spark.conf.get(key) == "false")
+    val (plain, after) = cachedBytes(spark)
+    assert(after.contains("false"))
+    assert(plain >= 800000, s"uncompressed batches hold every value: $plain bytes")
+    // an explicit session override is honoured and survives eager
+    val compressing = spark.newSession()
+    compressing.conf.set(key, "true")
+    val (packed, kept) = cachedBytes(compressing)
+    assert(kept.contains("true"))
+    assert(packed * 10 < plain, s"compressed batches run-length encode: $packed bytes")
   }
 
   test("eager preserves row content and schema through the re-persist") {

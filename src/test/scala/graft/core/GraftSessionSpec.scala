@@ -23,7 +23,9 @@ class GraftSessionSpec extends SparkSpec {
       "spark.file.transferTo" -> "false",
       "spark.hadoop.fs.file.impl" -> "graft.core.NoChmodLocalFileSystem",
       "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.core.NoChmodLocalFs",
-      "spark.sql.extensions" -> "graft.functions.NativeFunctions"))
+      "spark.sql.extensions" -> "graft.functions.NativeFunctions",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.inMemoryColumnarStorage.compressed" -> "false"))
     val host = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors)
     assert(GraftSession.hostCores == host)
@@ -45,7 +47,7 @@ class GraftSessionSpec extends SparkSpec {
     val beforeCheckpoint = spark.sparkContext.getPersistentRDDs.keySet
     spark.range(0, 1000).localCheckpoint()
     assert((spark.sparkContext.getPersistentRDDs.keySet -- beforeCheckpoint).nonEmpty)
-    val scratch = Paths.get(graft.queries.Pipeline.scratchDir("graft_release_spec_"))
+    val scratch = Paths.get(GraftSession.scratchDir("graft_release_spec_"))
     Files.writeString(scratch.resolve("commit"), "0")
     assert(spark.catalog.isCached("graft_release_t"))
     // q237 registers its own view; a global temp view lives in global_temp

@@ -103,6 +103,49 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  test("reading events between two reads of orders leaves the orders entry in place") {
+    val s = spark.newSession()
+    val (_, first) = countingJobs(Tables(s, Sf0001).orders)
+    Tables(s, Sf0001).events
+    val (_, again) = countingJobs(Tables(s, Sf0001).orders)
+    assert((first, again) == ((1L, 0L)))
+  }
+
+  test("events with INT64 TIMESTAMP(NANOS) ts read as truncated microseconds, batch and stream alike") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    import org.apache.spark.sql.functions.{col, unix_micros}
+    import org.apache.spark.sql.types.TimestampType
+    withTempDir { dir =>
+      val s = spark.newSession()
+      val table = dir.resolve("events.parquet")
+      Files.createDirectory(table)
+      val schema = MessageTypeParser.parseMessageType(
+        "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+      // sub-microsecond digits that must truncate, and a value past 2^53 ns
+      val nanos = Seq(1L -> 1700000000123456999L, 2L -> 1700000000000000001L, 3L -> 999L)
+      val file = new org.apache.hadoop.fs.Path(table.resolve("part-0.parquet").toString)
+      val writer = ExampleParquetWriter.builder(file).withType(schema).build()
+      try nanos.foreach { case (id, ts) =>
+        writer.write(new SimpleGroupFactory(schema).newGroup().append("event_id", id).append("ts", ts))
+      } finally writer.close()
+      val want = nanos.map { case (id, ts) => (id, ts / 1000) }
+
+      def micros(df: DataFrame): Seq[(Long, Long)] = {
+        assert(df.schema("ts").dataType == TimestampType)
+        df.select(col("event_id"), unix_micros(col("ts"))).collect().toSeq
+          .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+      }
+      assert(micros(Tables(s, dir.toString).events) == want)
+
+      val q = graft.streaming.EventStream.readEvents(s, table.toString)
+        .writeStream.format("memory").queryName("graft_nanos_events").start()
+      try q.processAllAvailable() finally q.stop()
+      assert(micros(s.table("graft_nanos_events")) == want)
+    }
+  }
+
   test("two sessions do not share entries") {
     val (a, b) = (spark.newSession(), spark.newSession())
     val (_, firstA) = countingJobs(Tables(a, Sf0001).table("nation"))
